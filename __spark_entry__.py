@@ -2038,6 +2038,9 @@ def _q_ann_pq_oracle(spark, sf_dir):
     )
     anchors = qv.orderBy("vec_id").limit(8).collect()
     flat = np.array([r["embedding"] for r in anchors], dtype=np.float64)
+    # the oracle SQL hardcodes dim 64 (range(0, 64)) and subspace width 8
+    if flat.shape[1] != 64:
+        raise ValueError(f"ann_pq_topk_oracle assumes dim 64, got {flat.shape[1]}")
     m = 8
     dsub = flat.shape[1] // m
     books = np.stack([flat[:, j * dsub : (j + 1) * dsub] for j in range(m)])

@@ -465,7 +465,7 @@ def main(argv=None) -> int:
         choices=["spo", "pos", "osp", "ops", "pso"],
         help="permutation whose order -w stamps against (reference's perm argument)",
     )
-    q.add_argument("--batched", action="store_true", help="set-oriented: one job per wildcard class")
+    q.add_argument("--batched", action="store_true", help="set-oriented: the whole log as one broadcast join")
     q.set_defaults(fn=cmd_queries)
 
     ing = sub.add_parser("ingest", help="merge a delta transcript batch into an existing index")

@@ -20,25 +20,36 @@ Total cost: one range shuffle + one tiny collect; no single-task stage.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
 def _literal_df(spark, rows: list[tuple], schema: list[tuple[str, str]]) -> DataFrame:
-    """Tiny driver-side table as PURE JVM literals (explode of struct
-    array over range(1)). spark.createDataFrame(list) builds a
+    """Tiny driver-side table as ONE pure JVM literal: the rows travel as
+    a JSON string that from_json parses (constant-folded at planning) and
+    explode unnests over range(1). spark.createDataFrame(list) builds a
     ParallelCollectionRDD + PythonRDD whose evaluation spins up Python
     workers INSIDE the consuming job (measured: ~7s of dead wait per task
-    in broadcast subqueries at local[32]); literals stay in the JVM."""
-    if not rows:  # typed empty relation (empty-corpus path)
-        return spark.range(0).select(
-            *[F.lit(None).cast(t).alias(n) for n, t in schema]
-        )
-    structs = [
-        F.struct(*[F.lit(v).cast(t).alias(n) for v, (n, t) in zip(row, schema)])
-        for row in rows
-    ]
-    return spark.range(1).select(F.explode(F.array(*structs)).alias("_r")).select("_r.*")
+    in broadcast subqueries at local[32]); a struct-of-lit per cell stays
+    in the JVM too, but costs 3 py4j calls per cell. JSON integers parse
+    as exact longs (ids above 2^53 and negative hash ids survive), and
+    FAILFAST turns a cell that does not fit its type into an error, not
+    a silent NULL."""
+    names = [n for n, _ in schema]
+    ddl = ", ".join(f"`{n.replace('`', '``')}`: {t}" for n, t in schema)
+    js = json.dumps(
+        [dict(zip(names, row)) for row in rows],
+        # numpy scalars -> Python numbers; dates/decimals -> their text,
+        # which from_json parses back into the declared type
+        default=lambda v: v.item() if hasattr(v, "item") else str(v),
+    )
+    return spark.range(1).select(
+        F.explode(
+            F.from_json(F.lit(js), f"array<struct<{ddl}>>", {"mode": "FAILFAST"})
+        ).alias("_r")
+    ).select("_r.*")
 
 
 def dense_ids(

@@ -16,12 +16,14 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.ranking import _literal_df
 from ..operators.permutations import PERM_ORDERS
-from .router import select
+from .router import _ROUTE, _best_available, select
 
 
 @dataclass(frozen=True)
@@ -93,42 +95,61 @@ def run_querylog_batched(
     tables: dict[str, DataFrame],
     patterns: list[Pattern],
 ) -> DataFrame:
-    """Set-oriented execution of a whole querylog: ONE job per wildcard
-    class instead of one per query — the Spark-native way to run a 5000-
-    query workload (a driver loop of jobs measures scheduler overhead,
-    not the engine). Patterns become a small keys DataFrame; each class
-    is a broadcast semi-equi-join against its routed permutation table.
+    """Set-oriented execution of a whole querylog as ONE broadcast join —
+    the Spark-native way to run a 5000-query workload (a driver loop of
+    jobs measures scheduler overhead, not the engine), planned as one
+    join over a union rather than a union of per-class joins (the
+    per-branch cost "Joins over UNION ALL Queries", SIGMOD 2018, avoids).
 
-    Returns (qid, s, p, o) result rows for ALL patterns."""
+    Each pattern routes like select() (_ROUTE + _best_available). Every
+    routed table contributes one scan projected to (t, c1, c2, c3, s, p,
+    o), c1..c3 in that table's sort order; the keys table is one literal
+    (qid, t, k1, k2, k3), k2/k3 NULL where wildcarded. The join is equi
+    on (t, c1 = k1) with residuals `k2 IS NULL OR c2 = k2` (same for k3).
+    Patterns whose table has its leading column unbound (??? and reduced-
+    variant fallbacks such as ??O on a 2tp index) use a second scan of
+    that table under its own t whose c1 is the constant 0, and k1 = 0: on
+    that branch the join is on t alone, under the same residuals. So a
+    log costs one broadcast build plus one scan job, however many
+    wildcard classes it holds.
+
+    Returns (qid, s, p, o) result rows for ALL patterns (typed empty
+    frame for an empty log)."""
     spark = next(iter(tables.values())).sparkSession
-    by_mask: dict[tuple[bool, bool, bool], list[tuple[int, Pattern]]] = {}
-    for i, q in enumerate(patterns):
-        by_mask.setdefault((q.s is not None, q.p is not None, q.o is not None), []).append((i, q))
-    out: DataFrame | None = None
-    for mask, items in by_mask.items():
-        bound = [c for c, m in zip(("s", "p", "o"), mask) if m]
-        from .router import _ROUTE, _best_available
-
-        # reduced variants (2tp/2to/3t) may lack the preferred permutation;
-        # the equi-join on bound columns is order-independent, so ANY
-        # materialized permutation answers the class — _best_available picks
-        # the one whose sort order prunes best (same fallback as select()).
-        table = tables[_best_available(tables, _ROUTE[mask], set(bound))]
-        if not bound:  # ??? — full scan once, each such query sees it all
-            for qid, _ in items:
-                part = table.select(F.lit(qid).cast("long").alias("qid"), "s", "p", "o")
-                out = part if out is None else out.unionByName(part)
-            continue
-        # pure-JVM literal keys table: createDataFrame(list) would put a
-        # PythonRDD inside the broadcast and spin a python worker per task
-        # (~7s dead wait each, see functions/ranking._literal_df).
-        from ..functions.ranking import _literal_df
-
-        keys = _literal_df(
-            spark,
-            [(qid, *[getattr(q, c) for c in bound]) for qid, q in items],
-            [("qid", "long")] + [(c, "long") for c in bound],
+    if not patterns:
+        return _literal_df(spark, [], [(c, "long") for c in ("qid", "s", "p", "o")])
+    branches: dict[tuple[str, bool], int] = {}  # (table, lead bound) -> t
+    keys = []
+    for qid, q in enumerate(patterns):
+        vals = {"s": q.s, "p": q.p, "o": q.o}
+        bound = {c for c, v in vals.items() if v is not None}
+        name = _best_available(tables, _ROUTE[tuple(c in bound for c in "spo")], bound)
+        c1, c2, c3 = PERM_ORDERS[name]
+        lead = c1 in bound
+        t = branches.setdefault((name, lead), len(branches))
+        keys.append((qid, t, vals[c1] if lead else 0, vals[c2], vals[c3]))
+    scans = []
+    for (name, lead), t in branches.items():
+        c1, c2, c3 = PERM_ORDERS[name]
+        scans.append(
+            tables[name].select(
+                F.lit(t).alias("t"),
+                (F.col(c1) if lead else F.lit(0).cast("long")).alias("c1"),
+                F.col(c2).alias("c2"),
+                F.col(c3).alias("c3"),
+                "s", "p", "o",
+            )
         )
-        joined = table.join(F.broadcast(keys), on=bound).select("qid", "s", "p", "o")
-        out = joined if out is None else out.unionByName(joined)
-    return out
+    # pure-JVM literal keys table: createDataFrame(list) would put a
+    # PythonRDD inside the broadcast and spin a python worker per task
+    # (~7s dead wait each, see functions/ranking._literal_df).
+    k = _literal_df(
+        spark,
+        keys,
+        [("qid", "long"), ("t", "int"), ("k1", "long"), ("k2", "long"), ("k3", "long")],
+    ).alias("k")
+    u = reduce(DataFrame.unionByName, scans).alias("u")
+    cond = (F.col("u.t") == F.col("k.t")) & (F.col("u.c1") == F.col("k.k1"))
+    for c, kc in (("c2", "k2"), ("c3", "k3")):
+        cond &= F.col(f"k.{kc}").isNull() | (F.col(f"u.{c}") == F.col(f"k.{kc}"))
+    return u.join(F.broadcast(k), cond).select("k.qid", "u.s", "u.p", "u.o")

@@ -100,8 +100,9 @@ def select(
 def is_member(tables: dict[str, DataFrame], s: int, p: int, o: int) -> bool:
     """F1: fully-bound membership probe (reference: two trie finds,
     /root/reference/include/algorithms.hpp:280-298). Partition-pruned
-    single-range Parquet probe here."""
-    return bool(select(tables, s, p, o).limit(1).count())
+    single-range Parquet probe here. A plain count: limit(1) would plan
+    an extra single-partition exchange ahead of it."""
+    return select(tables, s, p, o).count() > 0
 
 
 def member_position(tables: dict[str, DataFrame], s: int, p: int, o: int) -> int:

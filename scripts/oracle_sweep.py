@@ -36,6 +36,9 @@ def main() -> int:
     argv = sys.argv[1:]
     out_path = os.environ.get("SPARK_GRAFT_SWEEP_OUT", "")
     if argv and argv[0] == "--out":
+        if len(argv) < 2:
+            print("usage: oracle_sweep.py [--out RESULTS.json] [SF_DIR] [NAME ...]", file=sys.stderr)
+            return 2
         out_path = argv[1]
         argv = argv[2:]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.1"

@@ -148,6 +148,104 @@ def test_querylog_batched_matches_router(spark, triples):
         assert got.reset_index(drop=True).equals(exp.reset_index(drop=True)), f"qid={qid}"
 
 
+_MASKS = [(1, 1, 1), (1, 1, 0), (1, 0, 0), (0, 1, 1), (0, 1, 0), (0, 0, 1), (1, 0, 1), (0, 0, 0)]
+
+
+def _mask_log(triples, n: int = 16, masks=_MASKS) -> list[ql.Pattern]:
+    """n sampled triples, each blanked by the next bound mask in turn."""
+    samples = ql.sample_querylog(triples, n=n, seed=5)
+    return [
+        ql.Pattern(*[v if m else None for v, m in zip(t, masks[i % len(masks)])])
+        for i, t in enumerate(samples)
+    ]
+
+
+def _router_rows(tables, pats) -> pd.DataFrame:
+    """Per-qid router.select answers, unioned so one action collects all."""
+    from functools import reduce
+
+    from rdf_indexes_spark.plans.router import select
+
+    parts = [
+        select(tables, s=q.s, p=q.p, o=q.o).select(F.lit(qid).cast("long").alias("qid"), "s", "p", "o")
+        for qid, q in enumerate(pats)
+    ]
+    return reduce(lambda a, b: a.unionByName(b), parts).toPandas()
+
+
+def _assert_same_rows(got: pd.DataFrame, want: pd.DataFrame) -> None:
+    cols = ["qid", "s", "p", "o"]
+    got = got[cols].sort_values(cols).reset_index(drop=True)
+    want = want[cols].sort_values(cols).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+
+def test_querylog_batched_all_masks(spark, triples):
+    """Every bound mask, ??? included, over the 5-perm dict: the one-join
+    plan returns exactly the router's rows per qid."""
+    tables = {name: triples for name in perm.PERM_ORDERS}
+    pats = _mask_log(triples)
+    assert {(q.s is not None, q.p is not None, q.o is not None) for q in pats} == {
+        tuple(bool(m) for m in mask) for mask in _MASKS
+    }
+    _assert_same_rows(ql.run_querylog_batched(tables, pats).toPandas(), _router_rows(tables, pats))
+
+
+def test_querylog_batched_reduced_fallback(spark, triples):
+    """A 2tp dict {spo, pos}: ??O has no table with o leading (it joins
+    on the table tag alone) and S?O falls back to spo with a residual on
+    o; both must still match the router per qid."""
+    tables = {"spo": triples, "pos": triples}
+    pats = _mask_log(triples, n=8, masks=[(0, 0, 1), (1, 0, 1), (0, 1, 0), (1, 1, 0)])
+    _assert_same_rows(ql.run_querylog_batched(tables, pats).toPandas(), _router_rows(tables, pats))
+
+
+def test_querylog_batched_empty_log(spark, triples):
+    tables = {name: triples for name in perm.PERM_ORDERS}
+    out = ql.run_querylog_batched(tables, [])
+    assert out.schema.simpleString() == "struct<qid:bigint,s:bigint,p:bigint,o:bigint>"
+    assert out.groupBy("qid").count().count() == 0
+
+
+def test_querylog_batched_job_count(spark, triples):
+    """A 7-class log whose tables all have their leading column bound is
+    one broadcast build plus one scan job — not one join per class."""
+    tables = {name: triples for name in perm.PERM_ORDERS}
+    pats = _mask_log(triples, n=14, masks=_MASKS[:7])
+    sc = spark.sparkContext
+    sc.setJobGroup("querylog_job_count", "querylog job-count guard")
+    try:
+        n = ql.run_querylog_batched(tables, pats).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n > 0
+    assert len(sc.statusTracker().getJobIdsForGroup("querylog_job_count")) <= 2
+
+
+def test_literal_df_roundtrip(spark):
+    """from_json literal table: exact longs beyond 2^53 and negative hash
+    ids, int, double, string (quotes, escapes, non-BMP) and NULL cells;
+    the empty table keeps the declared names and types."""
+    from pyspark.sql.types import DoubleType, IntegerType, LongType, StringType
+
+    from rdf_indexes_spark.functions.ranking import _literal_df
+
+    schema = [("a", "long"), ("b", "int"), ("c", "double"), ("d", "string")]
+    want_types = [("a", LongType()), ("b", IntegerType()), ("c", DoubleType()), ("d", StringType())]
+    rows = [
+        (2**63 - 1, 1, 1.5, "x"),
+        (-(2**62) - 7, -3, 0.1, 'q"u\\o\u00e9\U0001F600'),
+        (2**53 + 1, None, None, None),
+        (None, 0, 1e-300, ""),
+    ]
+    df = _literal_df(spark, rows, schema)
+    assert [(f.name, f.dataType) for f in df.schema] == want_types
+    assert [tuple(r) for r in df.collect()] == rows
+    empty = _literal_df(spark, [], schema)
+    assert [(f.name, f.dataType) for f in empty.schema] == want_types
+    assert empty.count() == 0
+
+
 def test_hash_ids_vocab(spark, transcripts):
     mentions = extract_mentions(transcripts).filter(F.col("pred") != "sameAs")
     m = mentions.withColumnRenamed("subj", "cs").withColumnRenamed("obj", "co")
