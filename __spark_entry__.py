@@ -629,16 +629,11 @@ def _q_kg_triples_oracle(spark, sf_dir):
     value-for-value by the SQL twin (components are 2-member by
     construction, so the oracle's closure is a single symmetric join)."""
     from rdf_indexes_spark.lexicon import SAME_AS
-    from rdf_indexes_spark.operators.canonicalize import (
-        canonical_map,
-        canonicalize_mentions,
-        connected_components,
-        edge_endpoints,
-    )
+    from rdf_indexes_spark.operators.canonicalize import canonicalize_mentions
     from rdf_indexes_spark.operators.encode import build_vocabs_fused, encode_mentions
     from rdf_indexes_spark.operators.extract import extract_mentions
-    from rdf_indexes_spark.operators.link import candidate_edges
     from rdf_indexes_spark.operators.permutations import dedup_triples
+    from rdf_indexes_spark.pipeline import build_canonical_map
 
     ev = _read(spark, sf_dir, "events")
     eid = F.col("event_id").cast("string")
@@ -650,11 +645,8 @@ def _q_kg_triples_oracle(spark, sf_dir):
     tr = ev.select(eid.alias("conv_id"), F.lit(0).alias("turn_idx"), text.alias("text"))
     mentions = extract_mentions(tr)
     facts = mentions.filter(F.col("pred") != SAME_AS)
-    edges = candidate_edges(mentions)
-    comps = connected_components(
-        edge_endpoints(edges), edges.select("a", "b"), fixed_rounds=4
-    )
-    canon = canonicalize_mentions(facts, canonical_map(facts, comps))
+    cmap = build_canonical_map(mentions, spark.sparkContext.defaultParallelism)
+    canon = canonicalize_mentions(facts, cmap)
     vocabs = build_vocabs_fused(canon)
     encoded, _ = encode_mentions(canon, vocabs)
     return dedup_triples(encoded).select("s", "p", "o")

@@ -286,7 +286,7 @@ def _worker(n_exec: int, corpus_path: str, warm_path: str, out_json: str) -> Non
     os.environ["PYTHONPATH"] = repo + os.pathsep + os.environ.get("PYTHONPATH", "")
     import shutil
 
-    from rdf_indexes_spark.pipeline import run_pipeline_fast
+    from rdf_indexes_spark.pipeline import run_pipeline
     from rdf_indexes_spark.session import get_spark
     from rdf_indexes_spark.sources.transcripts import TRANSCRIPT_SCHEMA
 
@@ -328,7 +328,7 @@ def _worker(n_exec: int, corpus_path: str, warm_path: str, out_json: str) -> Non
         .repartition(n_exec * EXEC_CORES * 2)
     )
     wdir = _scratch_dir()
-    run_pipeline_fast(spark, warm, wdir, num_partitions=SHUFFLE_PARTITIONS)
+    run_pipeline(spark, warm, wdir, num_partitions=SHUFFLE_PARTITIONS, input_id="warm")
     shutil.rmtree(wdir, ignore_errors=True)
 
     tr = spark.read.schema(TRANSCRIPT_SCHEMA).parquet(corpus_path)
@@ -336,8 +336,9 @@ def _worker(n_exec: int, corpus_path: str, warm_path: str, out_json: str) -> Non
     out_dir = _scratch_dir()
     t_epoch_ms = time.time() * 1000  # event-log filter: timed run only
     t0 = time.monotonic()
-    counters = run_pipeline_fast(spark, tr, out_dir, num_partitions=SHUFFLE_PARTITIONS)
+    art = run_pipeline(spark, tr, out_dir, num_partitions=SHUFFLE_PARTITIONS, input_id="timed")
     elapsed = time.monotonic() - t0
+    counters = {k: art.counters[k]["rows"] for k in ("mentions", "triples")}
     spark.stop()
     time.sleep(0.5)  # let the event log flush
     try:
@@ -459,7 +460,7 @@ def _cpu_probe() -> dict:
       - membw ceiling: numpy streaming over a 128 MB array (far beyond
         LLC) — the shared-memory-bandwidth component, which a shuffle-
         and scan-heavy Spark pipeline resembles much more closely.
-    Per-stage profiling (scripts/profile_pipeline.py) showed total task
+    Per-stage event-log profiling showed total task
     time inflating ~2.4x from 8 to 32 active threads while the alu probe
     predicts only ~1.4x — the membw probe captures the difference."""
     import multiprocessing as mp

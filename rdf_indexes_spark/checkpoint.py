@@ -30,6 +30,28 @@ def _fingerprint(*parts: str) -> str:
     return hashlib.sha256("||".join(parts).encode()).hexdigest()[:16]
 
 
+def read_manifest(path: str) -> dict | None:
+    """The JSON object at ``path``; None when the file is missing or is
+    not a JSON object (a torn or garbage manifest reads as absent, so its
+    stage rebuilds instead of failing the run)."""
+    try:
+        with open(path) as f:
+            obj = json.load(f)
+    except (FileNotFoundError, ValueError):  # ValueError: JSON/Unicode decode
+        return None
+    return obj if isinstance(obj, dict) else None
+
+
+def write_manifest(path: str, obj: dict) -> None:
+    """Write ``obj`` as JSON to a temp file, then ``os.replace`` it onto
+    ``path``: a crash mid-write leaves the previous file (or none), never
+    a torn one."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=1)
+    os.replace(tmp, path)
+
+
 class StageStore:
     """Parquet-backed stage cache under a work dir."""
 
@@ -45,11 +67,7 @@ class StageStore:
         return d, os.path.join(d, MANIFEST)
 
     def manifest(self, stage: str) -> dict | None:
-        _, mp = self._paths(stage)
-        if os.path.exists(mp):
-            with open(mp) as f:
-                return json.load(f)
-        return None
+        return read_manifest(self._paths(stage)[1])
 
     def stage_fp(self, stage: str, input_fps: list[str]) -> str:
         return _fingerprint(stage, self.config_fp, *input_fps)
@@ -107,7 +125,6 @@ class StageStore:
             "elapsed_sec": round(elapsed, 3),
             "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
-        with open(mp, "w") as f:
-            json.dump(manifest, f, indent=1)
+        write_manifest(mp, manifest)
         self.counters[stage] = {"rows": rows, "cached": False, "elapsed_sec": elapsed}
         return out, fp

@@ -37,26 +37,20 @@ drop-and-log delta semantics (scripts/map_dataset.py:61-83).
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .checkpoint import MANIFEST, write_manifest
 from .functions.ranking import _literal_df, dense_ids_grouped
 from .lexicon import SAME_AS
 from .operators import encode as enc
 from .operators import permutations as perm
-from .operators.canonicalize import (
-    canonical_map,
-    canonicalize_mentions,
-    connected_components,
-    edge_endpoints,
-)
+from .operators.canonicalize import canonicalize_mentions
 from .operators.extract import extract_mentions
-from .operators.link import candidate_edges
-from .pipeline import _persistent_rdd_ids, _unpersist_created_since
+from .pipeline import _persistent_rdd_ids, _unpersist_created_since, build_canonical_map
 
 _ROLES = [("s", "cs"), ("p", "pred"), ("o", "co")]
 
@@ -112,18 +106,12 @@ def read_index(spark: SparkSession, workdir: str):
 def _delta_canonical_mentions(
     transcripts: DataFrame, n: int
 ) -> tuple[DataFrame, int]:
-    """The extract→link→CC→canonicalize chain, batch-local (same plan
-    shape and cuts as run_pipeline_fast)."""
+    """The extract→link→CC→canonicalize chain, batch-local: run_pipeline's
+    operators with in-memory cuts in place of its Parquet stages."""
     mentions = extract_mentions(transcripts).persist()
     n_mentions = mentions.count()
     facts = mentions.filter(F.col("pred") != SAME_AS)
-    edges = candidate_edges(mentions).localCheckpoint()
-    cc_parts = max(8, min(n, edges.count() // 100_000 + 1))
-    comps = connected_components(
-        edge_endpoints(edges), edges.select("a", "b"), fixed_rounds=4,
-        num_partitions=cc_parts,
-    ).localCheckpoint(eager=False)
-    cmap = canonical_map(facts, comps).localCheckpoint()
+    cmap = build_canonical_map(mentions, n).localCheckpoint()
     canon = canonicalize_mentions(facts, cmap).persist()
     return canon, n_mentions
 
@@ -319,16 +307,14 @@ def merge_delta(
         "quarantined": n_quarantined,
         "elapsed_sec": round(time.monotonic() - t0, 3),
     }
-    with open(os.path.join(level, "_manifest.json"), "w") as f:
-        json.dump(
-            {
-                "delta_id": delta_id,
-                "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-                **counters,
-            },
-            f,
-            indent=1,
-        )
+    write_manifest(
+        os.path.join(level, MANIFEST),
+        {
+            "delta_id": delta_id,
+            "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            **counters,
+        },
+    )
     _unpersist_created_since(spark, _snap)
     return counters
 

@@ -11,17 +11,18 @@ with explicit stage checkpoints).
 
 Every stage lands in the StageStore (Parquet + manifest) for resumability;
 the whole run returns an Artifacts handle with lazily-readable tables.
+The mentions → canonical map prefix is ``build_canonical_map``, which delta
+ingest and ``__spark_entry__._q_kg_triples_oracle`` call too.
 """
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .checkpoint import StageStore, _fingerprint
+from .checkpoint import MANIFEST, StageStore, _fingerprint, read_manifest, write_manifest
 from .lexicon import SAME_AS
 from .operators import encode as enc
 from .operators import permutations as perm
@@ -42,10 +43,10 @@ def _persistent_rdd_ids(spark: SparkSession) -> set[int]:
 
 def _unpersist_created_since(spark: SparkSession, before: set[int]) -> None:
     """Drop every RDD persisted after the ``before`` snapshot (persist()s,
-    eager and lazy localCheckpoints alike). The pipelines call this on
-    exit: nothing lazy escapes them (run_pipeline_fast returns plain
-    counters; run_pipeline's Artifacts frames are parquet-backed reads),
-    so long-running sessions that loop builds hold zero leftover cache."""
+    eager and lazy localCheckpoints alike). run_pipeline and merge_delta
+    call this on exit: nothing lazy escapes them (Artifacts frames are
+    parquet-backed reads; merge_delta returns plain counters), so
+    long-running sessions that loop builds hold zero leftover cache."""
     for rid, jrdd in dict(spark.sparkContext._jsc.getPersistentRDDs()).items():
         if rid not in before:
             jrdd.unpersist(False)
@@ -53,7 +54,7 @@ def _unpersist_created_since(spark: SparkSession, before: set[int]) -> None:
 
 def _vocab_hints(ranked: DataFrame, vocab_s: DataFrame):
     """ONE tiny job over the materialized fused-vocab frame answers three
-    questions at once (shared by the fast and resumable paths):
+    questions at once:
      - vocab sizes: ids are dense 0..|vocab|-1, so ALL components fit
        int32 iff every vocab is < 2^31 terms → write-side downcast decided
        with no extra scan of the triples;
@@ -85,6 +86,29 @@ def _vocab_hints(ranked: DataFrame, vocab_s: DataFrame):
     return sizes, hubs, downcast
 
 
+def build_canonical_map(mentions: DataFrame, n: int) -> DataFrame:
+    """mentions → (surface, canonical): link edges, connected components
+    over the link graph, one representative per component.
+
+    ``n`` caps the CC loop's partitions. The loop is sized by the edge
+    count (one cheap count over the checkpointed edges), not the cluster:
+    its waves over a tiny graph at full shuffle width are pure dispatch
+    latency."""
+    facts = mentions.filter(F.col("pred") != SAME_AS)
+    # eager cut: edges feed the endpoints, the CC rounds and the count
+    edges = candidate_edges(mentions).localCheckpoint()
+    cc_parts = max(8, min(n, edges.count() // 100_000 + 1))
+    # CC over edge ENDPOINTS only: every other surface maps to itself via
+    # canonicalize_mentions' left join + coalesce. The link graph is stars
+    # and short chains; if 4 rounds leave a label moving, the loop's
+    # convergence check continues to the fixpoint.
+    comps = connected_components(
+        edge_endpoints(edges), edges.select("a", "b"), fixed_rounds=4,
+        num_partitions=cc_parts,
+    )
+    return canonical_map(facts, comps)
+
+
 @dataclass
 class Artifacts:
     workdir: str
@@ -98,113 +122,6 @@ class Artifacts:
     permutations: dict[str, DataFrame]
     stats: DataFrame
     counters: dict[str, dict]
-
-
-def run_pipeline_fast(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    out_dir: str,
-    num_partitions: int | None = None,
-) -> dict[str, int]:
-    """Single-lineage pipeline for benchmarking: same operators, no
-    per-stage Parquet checkpoints (persist() at reuse points instead).
-    Returns row counters. Production resumable path is run_pipeline."""
-    # LAZY localCheckpoint (eager=False) at each reuse point: cuts the
-    # logical plan to a checkpoint node — so (a) downstream actions stop
-    # re-running Catalyst analysis over the whole accumulated lineage
-    # (UDFs + CC rounds + joins, ~1-1.5s of driver time per action), and
-    # (b) multiply-referenced subtrees stop replicating work — WITHOUT a
-    # separate materialization job per stage: the first consuming job
-    # computes and caches each cut. The whole pipeline collapses to ~10
-    # jobs, which is what makes the serial floor small enough to scale.
-    # Storage is MEMORY_AND_DISK; the production path (run_pipeline) cuts
-    # at the same points via Parquet stage writes.
-    # Eager-vs-lazy rule: a frame whose references can be evaluated
-    # CONCURRENTLY (union branches of one job, parallel broadcast builds)
-    # must be EAGER — a lazy checkpoint caches only after the first
-    # partition computes, so concurrent branches duplicate the work (the
-    # extractor would run twice inside the surfaces union). Frames
-    # consumed strictly sequentially stay LAZY and piggyback on their
-    # first consumer's job. Net: ~10 jobs for the whole pipeline.
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    _cache_snapshot = _persistent_rdd_ids(spark)
-    # DATA-SCALE frames (mentions, canon) cache as COLUMNAR persist(), not
-    # localCheckpoint: RDD-row checkpoint storage of a 10^8-mention frame
-    # fills every executor heap and GC-thrashes wide clusters (profiled at
-    # 32M turns: 325s of GC in one stage); InMemoryRelation's compressed
-    # column batches are several times smaller and evictable. The lineage
-    # cut matters less here (shallow plans); concurrent-consumer safety is
-    # preserved by materializing via count() BEFORE the fan-out consumers
-    # (a lazy cache + two concurrent first-consumers would compute the
-    # extract twice).
-    mentions = extract_mentions(transcripts).persist()
-    n_mentions = mentions.count()  # materialize; reused as the counter
-    facts = mentions.filter(F.col("pred") != SAME_AS)
-    # edges is referenced 4x downstream (endpoints x2, symmetrized x2):
-    # without a cut the scoring subtree replicates per reference and the
-    # fused DAG degrades ~4x beyond the sum of its parts. It is
-    # link-graph-sized, so the cut is cheap at any corpus scale.
-    edges = candidate_edges(mentions).localCheckpoint()  # 4-way fan-out
-    # CC over edge ENDPOINTS only (linked surfaces); everything else maps
-    # to itself via canonicalize_mentions' left-join+coalesce — the
-    # iterated CC state is |link graph|, not |vocabulary|. fixed_rounds
-    # keeps the whole canonicalization one lazy plan (zero driver
-    # round-trips); the link graph is stars+short chains, diameter <= ~4.
-    # CC partitions sized by the edge count (one cheap count over the
-    # checkpointed edges), not the cluster — the loop's waves over a
-    # tiny graph at full shuffle width are pure dispatch latency.
-    cc_parts = max(8, min(n, edges.count() // 100_000 + 1))
-    comps = connected_components(
-        edge_endpoints(edges), edges.select("a", "b"), fixed_rounds=4,
-        num_partitions=cc_parts,
-    ).localCheckpoint(eager=False)  # single consumer (cmap)
-    # cmap's reduce stages (occ / best / reps) are ALL link-graph-scale —
-    # occ semi-filters the fact stream by the component surfaces before
-    # aggregating (canonical_map) — so the edge-count-derived width is
-    # the right size for every exchange inside it; map sides read the
-    # mention cache unaffected
-    _sp_key = "spark.sql.shuffle.partitions"
-    _sp_old = spark.conf.get(_sp_key)
-    spark.conf.set(_sp_key, str(cc_parts))
-    try:
-        cmap = canonical_map(facts, comps).localCheckpoint()  # 2 concurrent bc builds
-    finally:
-        spark.conf.set(_sp_key, _sp_old)
-    # canon's consumers are strictly sequential (vocab melt job populates
-    # the cache, encode joins reuse it) — lazy columnar persist
-    canon = canonicalize_mentions(facts, cmap).persist()
-    # one fused job chain ranks all three role vocabularies
-    vocabs, ranked = enc.build_vocabs_fused(canon, with_ranked=True)
-    # hints first (one tiny agg over the checkpointed ranked frame):
-    # sizes pick the encode join strategy, hubs/downcast feed the write
-    sizes, hubs, downcast = _vocab_hints(ranked, vocabs["s"])
-    encoded, _ = enc.encode_mentions(canon, vocabs, sizes=sizes)
-    # EAGER: the permutation write and the counter jobs below consume
-    # triples CONCURRENTLY (separate driver threads) — the concurrent-
-    # consumer rule again; the dedup shuffle would otherwise run twice.
-    triples = perm.dedup_triples(encoded).localCheckpoint(eager=True)
-    # overlap the write (the pipeline's largest tail block) with the
-    # counter jobs: Spark's scheduler runs jobs from separate driver
-    # threads concurrently; the counters touch only checkpointed frames.
-    from concurrent.futures import ThreadPoolExecutor
-
-    counters: dict[str, int] = {"distinct_subjects": sizes["s"]}
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fut = pool.submit(
-            perm.write_permutations_unified,
-            triples,
-            out_dir,
-            num_partitions=n,
-            hubs=hubs,
-            downcast=downcast,
-        )
-        counters["mentions"] = n_mentions
-        counters["triples"] = triples.count()
-        fut.result()
-    # drop every cache/checkpoint created during the run (nothing lazy
-    # escapes: the return value is a plain dict)
-    _unpersist_created_since(spark, _cache_snapshot)
-    return counters
 
 
 def run_pipeline(
@@ -223,17 +140,7 @@ def run_pipeline(
 
     facts = mentions.filter(F.col("pred") != SAME_AS)
 
-    def _build_cmap() -> DataFrame:
-        # eager cut (same as the fast path): edges feed endpoints + the
-        # CC rounds, and the count sizes the CC loop's partitions
-        edges = candidate_edges(mentions).localCheckpoint()
-        cc_parts = max(8, min(n, edges.count() // 100_000 + 1))
-        comps = connected_components(
-            edge_endpoints(edges), edges.select("a", "b"), num_partitions=cc_parts
-        )
-        return canonical_map(facts, comps)
-
-    cmap, fp_c = store.run("canonical_map", [fp_m], _build_cmap)
+    cmap, fp_c = store.run("canonical_map", [fp_m], lambda: build_canonical_map(mentions, n))
 
     canon, fp_cm = store.run(
         "canonical_mentions", [fp_c], lambda: canonicalize_mentions(facts, cmap)
@@ -269,14 +176,14 @@ def run_pipeline(
 
     triples, fp_t = store.run("triples", [fp_u], lambda: perm.dedup_triples(unsorted))
 
-    # permutations + stats keyed off the triples fingerprint. Same plan
-    # quality as run_pipeline_fast: vocab-derived hubs + downcast hints
-    # (one tiny agg over the parquet-backed ranked stage) spare the write
-    # its degree-census shuffle and min/max probe.
+    # permutations + stats keyed off the triples fingerprint; a missing or
+    # unreadable manifest rebuilds them. Vocab-derived hubs + downcast
+    # hints (one tiny agg over the parquet-backed ranked stage) spare the
+    # write its degree-census shuffle and min/max probe.
     perm_dir = os.path.join(workdir, "perms")
-    perm_manifest = os.path.join(perm_dir, "_manifest.json")
+    perm_manifest = os.path.join(perm_dir, MANIFEST)
     fp_p = _fingerprint("perms", fp_t)
-    if not (os.path.exists(perm_manifest) and json.load(open(perm_manifest)).get("fingerprint") == fp_p):
+    if (read_manifest(perm_manifest) or {}).get("fingerprint") != fp_p:
         _, hubs, downcast = _hints()
         perm.write_permutations_unified(
             triples,
@@ -287,8 +194,7 @@ def run_pipeline(
         )
         stats_df = perm.compute_stats(triples)
         stats_df.write.mode("overwrite").parquet(os.path.join(perm_dir, "stats"))
-        with open(perm_manifest, "w") as f:
-            json.dump({"fingerprint": fp_p, "stage": "perms"}, f)
+        write_manifest(perm_manifest, {"fingerprint": fp_p, "stage": "perms"})
     tables = perm.read_permutations_unified(spark, os.path.join(perm_dir, "perms5"))
     stats = spark.read.parquet(os.path.join(perm_dir, "stats"))
     _unpersist_created_since(spark, _cache_snapshot)  # Artifacts are parquet-backed

@@ -34,6 +34,7 @@ import os
 
 from pyspark.sql import SparkSession
 
+from ..checkpoint import write_manifest
 from .extract_stream import stream_transcripts
 
 
@@ -79,8 +80,7 @@ def stream_ingest(
             delta_id=f"stream-{batch_id}",
         )
         applied[key] = counters
-        with open(applied_path, "w") as f:
-            json.dump(applied, f, sort_keys=True)
+        write_manifest(applied_path, applied)
 
     writer = (
         stream_transcripts(spark, feed_path, max_files=max_files)

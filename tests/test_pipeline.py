@@ -190,25 +190,21 @@ def test_vocab_freq_plan_no_corpus_join(spark, transcripts):
 
 def test_empty_corpus_end_to_end(spark, workdir):
     """Zero-turn input must flow through extract -> CC -> vocab -> encode ->
-    permutations without error: zero counters, empty-but-queryable
-    permutation tables (the zero-part-file parquet read is the known
-    regression spot)."""
-    import os
-
-    from rdf_indexes_spark.operators.permutations import read_permutations_unified
-    from rdf_indexes_spark.pipeline import run_pipeline_fast
+    permutations without error: zero rows in every stage, empty-but-
+    queryable permutation tables (the zero-part-file parquet read is the
+    known regression spot) and an all-zero stats row."""
     from rdf_indexes_spark.plans.router import select
     from rdf_indexes_spark.sources.transcripts import TRANSCRIPT_SCHEMA
 
     empty = spark.createDataFrame([], TRANSCRIPT_SCHEMA)
-    out = os.path.join(workdir, "empty_perms")
-    counters = run_pipeline_fast(spark, empty, out, num_partitions=4)
-    assert counters["mentions"] == 0
-    assert counters["triples"] == 0
-    tables = read_permutations_unified(spark, out)
-    assert set(tables) == {"spo", "pos", "osp", "ops", "pso"}
-    assert tables["spo"].count() == 0
-    assert select(tables, s=1).count() == 0
+    art = run_pipeline(
+        spark, empty, os.path.join(workdir, "empty"), num_partitions=4, input_id="empty"
+    )
+    assert art.counters and all(c["rows"] == 0 for c in art.counters.values()), art.counters
+    assert set(art.permutations) == {"spo", "pos", "osp", "ops", "pso"}
+    assert all(t.count() == 0 for t in art.permutations.values())
+    assert select(art.permutations, s=1).count() == 0
+    assert set(art.stats.first().asDict().values()) == {0}
 
 
 def test_resume_rebuilds_only_invalidated_stage(spark, transcripts, workdir, artifacts):
@@ -241,40 +237,56 @@ def test_resume_rebuilds_only_invalidated_stage(spark, transcripts, workdir, art
     assert set(rebuilt["partition_rows"]) <= set(rebuilt["partition_bytes"])
 
 
-def test_fast_and_resumable_paths_identical(spark, transcripts, workdir, monkeypatch):
-    """The resumable path must ship the fast path's plan hints: identical
-    permutation parquet, and NEITHER path may run the degree-census
-    shuffle (hub_subjects) — hubs come from the already-ranked vocab."""
+def _perm_rows(tables) -> dict[str, list[tuple]]:
+    return {name: sorted(tuple(r) for r in df.collect()) for name, df in tables.items()}
+
+
+def test_build_uses_vocab_hubs_and_leaves_no_caches(
+    spark, transcripts, workdir, artifacts, monkeypatch
+):
+    """One fresh build: the permutation write takes its hubs from the
+    already-ranked vocab (the degree-census shuffle, hub_subjects, never
+    runs), no persisted RDD outlives the call (sessions that loop builds
+    must not accumulate caches), and the permutations equal the session
+    build's."""
     import rdf_indexes_spark.operators.permutations as perm_mod
-    from rdf_indexes_spark.operators.permutations import read_permutations_unified
-    from rdf_indexes_spark.pipeline import run_pipeline_fast
+    from rdf_indexes_spark.pipeline import _persistent_rdd_ids
 
     def _census_forbidden(*a, **k):
         raise AssertionError("degree census ran: hubs hint not passed to the writer")
 
     monkeypatch.setattr(perm_mod, "hub_subjects", _census_forbidden)
-    fast_dir = os.path.join(workdir, "unify_fast")
-    run_pipeline_fast(spark, transcripts, fast_dir)
-    art = run_pipeline(spark, transcripts, os.path.join(workdir, "unify_res"), input_id="u1")
-    fast = read_permutations_unified(spark, fast_dir)
-    assert set(fast) == set(art.permutations)
-    for name in fast:
-        a = sorted(tuple(r) for r in fast[name].collect())
-        b = sorted(tuple(r) for r in art.permutations[name].collect())
-        assert a == b, f"permutation {name} differs between paths"
-
-
-def test_no_leftover_caches_after_pipelines(spark, transcripts, workdir):
-    """Cache hygiene: sessions that loop builds must not accumulate
-    persisted frames — both pipeline paths drop every RDD they persisted
-    (persist()s and localCheckpoints) before returning."""
-    from rdf_indexes_spark.pipeline import _persistent_rdd_ids, run_pipeline_fast
-
+    want = _perm_rows(artifacts.permutations)
     before = _persistent_rdd_ids(spark)
-    run_pipeline_fast(spark, transcripts, os.path.join(workdir, "hyg_fast"))
+    art = run_pipeline(spark, transcripts, os.path.join(workdir, "fresh"), input_id="u1")
     assert _persistent_rdd_ids(spark) <= before
-    run_pipeline(spark, transcripts, os.path.join(workdir, "hyg_res"), input_id="h1")
-    assert _persistent_rdd_ids(spark) <= before
+    assert _perm_rows(art.permutations) == want
+
+
+def test_unreadable_manifests_rebuild_their_stage(spark, transcripts, workdir, artifacts):
+    """A torn stage manifest and a garbage perms manifest read as absent:
+    the rerun rebuilds exactly those stages (no JSONDecodeError), the
+    other stages stay cached, and the index equals the clean build's.
+    Runs on a copy so the session workdir's files are never rewritten."""
+    import shutil
+
+    from rdf_indexes_spark.checkpoint import read_manifest
+
+    pipe = os.path.join(workdir, "torn")
+    shutil.copytree(os.path.join(workdir, "pipe"), pipe)
+    victim = os.path.join(pipe, "triples_unsorted", "_manifest.json")
+    with open(victim) as f:
+        text = f.read()
+    with open(victim, "w") as f:
+        f.write(text[: len(text) // 2])
+    perms_manifest = os.path.join(pipe, "perms", "_manifest.json")
+    with open(perms_manifest, "wb") as f:
+        f.write(b"\xff\x00 not json {")
+    art = run_pipeline(spark, transcripts, pipe, input_id="test600")
+    rebuilt = {stage for stage, c in art.counters.items() if not c["cached"]}
+    assert rebuilt == {"triples_unsorted"}, art.counters
+    assert read_manifest(perms_manifest)["stage"] == "perms"
+    assert _perm_rows(art.permutations) == _perm_rows(artifacts.permutations)
 
 
 def test_rank_remap_roundtrip(artifacts):
