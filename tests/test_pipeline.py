@@ -241,26 +241,31 @@ def _perm_rows(tables) -> dict[str, list[tuple]]:
     return {name: sorted(tuple(r) for r in df.collect()) for name, df in tables.items()}
 
 
-def test_build_uses_vocab_hubs_and_leaves_no_caches(
-    spark, transcripts, workdir, artifacts, monkeypatch
-):
-    """One fresh build: the permutation write takes its hubs from the
-    already-ranked vocab (the degree-census shuffle, hub_subjects, never
-    runs), no persisted RDD outlives the call (sessions that loop builds
-    must not accumulate caches), and the permutations equal the session
-    build's."""
+def test_fast_and_resumable_paths_identical(spark, transcripts, workdir, artifacts, monkeypatch):
+    """The one resumable build keeps the plan hints of the deleted fast
+    path: the permutation write takes its hubs from the already-ranked
+    vocab, so the degree-census shuffle (hub_subjects) never runs, and a
+    fresh build's permutations equal the session build's."""
     import rdf_indexes_spark.operators.permutations as perm_mod
-    from rdf_indexes_spark.pipeline import _persistent_rdd_ids
 
     def _census_forbidden(*a, **k):
         raise AssertionError("degree census ran: hubs hint not passed to the writer")
 
     monkeypatch.setattr(perm_mod, "hub_subjects", _census_forbidden)
-    want = _perm_rows(artifacts.permutations)
+    art = run_pipeline(spark, transcripts, os.path.join(workdir, "unify_res"), input_id="u1")
+    assert set(art.permutations) == set(artifacts.permutations)
+    assert _perm_rows(art.permutations) == _perm_rows(artifacts.permutations)
+
+
+def test_no_leftover_caches_after_pipelines(spark, transcripts, workdir):
+    """Cache hygiene: sessions that loop builds must not accumulate
+    persisted frames — a build drops every RDD it persisted (persist()s
+    and localCheckpoints) before returning."""
+    from rdf_indexes_spark.pipeline import _persistent_rdd_ids
+
     before = _persistent_rdd_ids(spark)
-    art = run_pipeline(spark, transcripts, os.path.join(workdir, "fresh"), input_id="u1")
+    run_pipeline(spark, transcripts, os.path.join(workdir, "hyg_res"), input_id="h1")
     assert _persistent_rdd_ids(spark) <= before
-    assert _perm_rows(art.permutations) == want
 
 
 def test_unreadable_manifests_rebuild_their_stage(spark, transcripts, workdir, artifacts):
