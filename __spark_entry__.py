@@ -645,7 +645,7 @@ def _q_kg_triples_oracle(spark, sf_dir):
     tr = ev.select(eid.alias("conv_id"), F.lit(0).alias("turn_idx"), text.alias("text"))
     mentions = extract_mentions(tr)
     facts = mentions.filter(F.col("pred") != SAME_AS)
-    cmap = build_canonical_map(mentions, spark.sparkContext.defaultParallelism)
+    cmap = build_canonical_map(mentions)
     canon = canonicalize_mentions(facts, cmap)
     vocabs = build_vocabs_fused(canon)
     encoded, _ = encode_mentions(canon, vocabs)
@@ -1914,19 +1914,13 @@ def _cc_edges(spark, sf_dir):
 
 
 def _q_cc_components(spark, sf_dir):
-    """The canonicalization core as an oracle-checked query: salted
-    min-label connected components over the membership graph. The
-    DuckDB twin is a recursive reachability CTE + min label — exact
-    equality, not just component counts."""
-    from rdf_indexes_spark.operators.canonicalize import (
-        connected_components,
-        edge_endpoints,
-    )
+    """The canonicalization core as an oracle-checked query: min-label
+    connected components over the membership graph. The DuckDB twin is a
+    recursive reachability CTE + min label — exact equality, not just
+    component counts."""
+    from rdf_indexes_spark.operators.canonicalize import connected_components
 
-    edges = _cc_edges(spark, sf_dir)
-    return connected_components(edge_endpoints(edges), edges).select(
-        "surface", "component"
-    )
+    return connected_components(_cc_edges(spark, sf_dir).localCheckpoint())
 
 
 def _q_sample_weighted(spark, sf_dir):
@@ -3251,7 +3245,7 @@ def oracle_sql() -> dict[str, str]:
         ),
         # survivor selection: connected components over the 0.8-Jaccard
         # pair graph (recursive transitive closure in the oracle; the
-        # engine runs the distributed salted min-label CC), keep the min
+        # engine runs the distributed min-label CC), keep the min
         # doc id per cluster + all unpaired docs
         "a2_extract_oracle": _kg_extract_oracle_sql(),
         "dedup_minhash_oracle": _minhash_oracle_sql(),

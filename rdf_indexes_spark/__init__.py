@@ -5,7 +5,7 @@ A from-scratch re-expression of the capabilities of jermp/rdf_indexes
 
   transcripts → mention extraction (Arrow/pandas UDFs)
              → entity-link scoring
-             → canonicalization (connected components, salted)
+             → canonicalization (min-label connected components)
              → dictionary encoding (freq-desc dense ids, 3 id spaces)
              → 5 sorted permutation tables + stats
              → 9-pattern triple-selection query router

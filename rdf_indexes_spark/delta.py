@@ -52,8 +52,6 @@ from .operators.canonicalize import canonicalize_mentions
 from .operators.extract import extract_mentions
 from .pipeline import _persistent_rdd_ids, _unpersist_created_since, build_canonical_map
 
-_ROLES = [("s", "cs"), ("p", "pred"), ("o", "co")]
-
 
 def _deltas_dir(workdir: str) -> str:
     return os.path.join(workdir, "deltas")
@@ -103,15 +101,13 @@ def read_index(spark: SparkSession, workdir: str):
     return read_vocab_ranked(spark, workdir), read_triples(spark, workdir), tables
 
 
-def _delta_canonical_mentions(
-    transcripts: DataFrame, n: int
-) -> tuple[DataFrame, int]:
+def _delta_canonical_mentions(transcripts: DataFrame) -> tuple[DataFrame, int]:
     """The extract→link→CC→canonicalize chain, batch-local: run_pipeline's
     operators with in-memory cuts in place of its Parquet stages."""
     mentions = extract_mentions(transcripts).persist()
     n_mentions = mentions.count()
     facts = mentions.filter(F.col("pred") != SAME_AS)
-    cmap = build_canonical_map(mentions, n).localCheckpoint()
+    cmap = build_canonical_map(mentions).localCheckpoint()
     canon = canonicalize_mentions(facts, cmap).persist()
     return canon, n_mentions
 
@@ -185,30 +181,17 @@ def merge_delta(
 
     base_ranked = read_vocab_ranked(spark, workdir)
     base_triples = read_triples(spark, workdir)
-    canon, n_mentions = _delta_canonical_mentions(delta_transcripts, n)
+    canon, n_mentions = _delta_canonical_mentions(delta_transcripts)
 
     # --- extend the dictionaries (delta-scale work only) -----------------
-    melted = canon.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(role).alias("role"), F.col(c).alias("term"))
-                    for role, c in _ROLES
-                ]
-            )
-        ).alias("rt"),
-        enc._pos_struct().alias("_pos"),
-    ).select("rt.role", "rt.term", "_pos")
-    freq = melted.groupBy("role", "term").agg(
-        F.count("*").alias("cnt"), F.min("_pos").alias("first_pos")
-    )
+    freq = enc.role_freq(canon)
     # sizes per role = next free id (ids are dense 0..n-1 per role across
     # base + prior levels); ONE tiny agg over the dictionary
     sizes = {
         r["role"]: int(r["n"])
         for r in base_ranked.groupBy("role").agg(F.count("*").alias("n")).collect()
     }
-    for role, _ in _ROLES:
+    for role, _ in enc.ROLES:
         sizes.setdefault(role, 0)
     if extend_vocab:
         new_freq = freq.join(
@@ -220,7 +203,7 @@ def merge_delta(
         )
         off = _literal_df(
             spark,
-            [(role, sizes[role]) for role, _ in _ROLES],
+            [(role, sizes[role]) for role, _ in enc.ROLES],
             [("role", "string"), ("_base", "long")],
         )
         vocab_new = (
@@ -241,12 +224,12 @@ def merge_delta(
         r["role"]: int(r["n"])
         for r in vocab_new.groupBy("role").agg(F.count("*").alias("n")).collect()
     }
-    merged_sizes = {role: sizes[role] + new_terms.get(role, 0) for role, _ in _ROLES}
+    merged_sizes = {role: sizes[role] + new_terms.get(role, 0) for role, _ in enc.ROLES}
 
     # --- encode against the frozen+extended dictionaries -----------------
     vocabs = {
         role: merged_ranked.filter(F.col("role") == role).select("term", "id", "cnt")
-        for role, _ in _ROLES
+        for role, _ in enc.ROLES
     }
     encoded, quarantine = enc.encode_mentions(canon, vocabs, sizes=merged_sizes)
     n_quarantined = quarantine.count() if not extend_vocab else 0

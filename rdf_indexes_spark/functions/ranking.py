@@ -213,24 +213,6 @@ def grouped_rank(
     )
 
 
-def salted_min_agg(
-    df: DataFrame,
-    key_cols: list[str],
-    value_col: str,
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Two-level min aggregation: groupBy(key, salt) then groupBy(key).
-
-    Skew-safe groupBy for hub keys (the reference documents the same heavy
-    tail with its range-length census, /root/reference/include/stats.hpp:63-114).
-    Min is algebraic, so partial aggregation already helps; the explicit
-    salt keeps any single reducer from owning a hub key's full row set.
-    """
-    salted = df.withColumn("_salt", F.pmod(F.xxhash64(F.col(value_col)), F.lit(salt_buckets)))
-    lvl1 = salted.groupBy(*key_cols, "_salt").agg(F.min(value_col).alias(value_col))
-    return lvl1.groupBy(*key_cols).agg(F.min(value_col).alias(value_col))
-
-
 def exact_quantiles(
     df: DataFrame,
     col: str,

@@ -1,25 +1,24 @@
 """Canonicalization: connected components over link edges, then
 frequency-based representative selection (north-rule step 3).
 
-CC algorithm: iterative min-label propagation over the symmetrized edge
-set — label(v) ← min(label(v), min label of neighbors) until fixpoint.
+CC algorithm: min-label propagation over the symmetrized edge set —
+label(v) ← min(label(v), min label of neighbors) until no label moves.
 Alias clusters have tiny diameter (surface variants of one entity), so
-convergence is 2-4 rounds; each round is one shuffle join + one skew-safe
-two-level min aggregation (hub surfaces — the zipf head the reference's
-range census documents, /root/reference/include/stats.hpp:63-114 — are
-salted so no single reducer owns a hub's whole edge list). Each round is
-localCheckpoint'ed to cut lineage, which is what makes the loop viable at
-10^12-edge scale (and resumable mid-pipeline via the stage manifest).
-
-For adversarial long-chain graphs, swap the body for alternating
-large-star/small-star (Kiveris et al., "Connected Components in MapReduce
-and Beyond") — the helper is structured so only ``_one_round`` changes.
+``ROUNDS`` rounds are built as ONE lazy plan — each round one shuffle
+join + one min aggregation, with no per-round job — and a single check
+round then proves convergence. Min is algebraic, so partial aggregation
+already combines a hub surface's labels map-side before the exchange.
+A graph whose diameter exceeds ``ROUNDS`` (a long chain) keeps taking
+checked rounds, each cut with a lazy checkpoint, up to ``MAX_ROUNDS``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+ROUNDS = 4
+MAX_ROUNDS = 25
 
 
 def edge_endpoints(edges: DataFrame) -> DataFrame:
@@ -50,145 +49,69 @@ def _propagate(sym_id: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(
-    nodes: DataFrame,
-    edges: DataFrame,
-    max_iter: int = 25,
-    fixed_rounds: int | None = None,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """nodes(surface) + edges(a,b) → (surface, component) with component =
-    lexicographic-min surface reachable from each node.
+def connected_components(edges: DataFrame) -> DataFrame:
+    """edges(a, b) → (surface, component) for every edge endpoint, with
+    component = the minimum surface reachable from it.
 
-    fixed_rounds=k builds k propagation rounds as ONE lazy plan — no
-    per-round checkpoint — then runs ONE verification round and counts
-    changed labels (a single cheap job over link-graph-sized state): if
-    any label still moves, k was below the component diameter and the
-    loop continues to the fixpoint instead of silently under-merging.
-    The default (None) is the general fixpoint loop with per-round
-    lineage checkpoints — the 10^12-edge-safe path.
+    ``edges`` must be materialized (cached or checkpointed): it is read
+    by the edge count, the endpoints and the symmetrization.
 
-    num_partitions sizes the loop's exchanges by the LINK GRAPH (callers
-    pass an edge-count-derived value), not the session default: the loop
-    is ~2 stage waves per round over graph-sized state, so surplus
-    partitions are pure task-dispatch latency repeated every round — a
-    fixed cost identical at every cluster size. The aggregations inside
-    the rounds follow spark.sql.shuffle.partitions, and every CC stage
-    executes inside this function's verification job (the k-round plan +
-    lazy checkpoints all materialize there), so the conf is scoped to
-    the function body and restored on exit — keeping ALL loop exchanges
-    at num_partitions so each round's join stays co-partitioned (a
-    mismatch would re-exchange the labels side every round)."""
-    salt_k = 16
-    spark = nodes.sparkSession
-    _conf_key = "spark.sql.shuffle.partitions"
-    _old_parts = spark.conf.get(_conf_key)
-    if num_partitions:
-        spark.conf.set(_conf_key, str(num_partitions))
+    The loop's exchanges are sized by the LINK GRAPH — one partition per
+    100k edges, between 8 and the default parallelism — not the session
+    default: every round is ~2 stage waves over graph-sized state, so
+    surplus partitions are pure task-dispatch latency repeated every
+    round, a fixed cost identical at every cluster size. The aggregations
+    inside the rounds follow spark.sql.shuffle.partitions, and every CC
+    stage executes inside this function's check jobs, so the conf is
+    scoped to the call and restored on exit — keeping ALL loop exchanges
+    at one width so each round's join stays co-partitioned (a mismatch
+    would re-exchange the labels side every round)."""
+    spark = edges.sparkSession
+    nparts = max(8, min(spark.sparkContext.defaultParallelism, edges.count() // 100_000 + 1))
+    nodes = edge_endpoints(edges)
+    conf_key = "spark.sql.shuffle.partitions"
+    old_parts = spark.conf.get(conf_key)
+    spark.conf.set(conf_key, str(nparts))
+    # no dedup shuffle on sym: min-aggregation is idempotent under
+    # duplicate edges. Repartition BEFORE persist: the 3-way union
+    # otherwise caches with the summed partition count of its inputs, and
+    # every round re-reads all of those near-empty blocks; one hash
+    # exchange on the join key collapses them and rounds then join
+    # co-partitioned sides.
+    sym_id = (
+        edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+        .unionAll(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
+        .unionAll(nodes.select(F.col("surface").alias("src"), F.col("surface").alias("dst")))
+        .repartition(nparts, "dst")
+        .persist()  # reused every round inside the consuming jobs
+    )
+    # try/finally: neither the cached symmetric graph nor the conf may
+    # outlive this call on ANY path — on success the check job has already
+    # materialized labels' lazy checkpoint, so the result no longer needs
+    # the cache.
     try:
-        return _connected_components_body(
-            nodes, edges, max_iter, fixed_rounds, num_partitions, salt_k
-        )
-    finally:
-        spark.conf.set(_conf_key, _old_parts)
-
-
-def _connected_components_body(
-    nodes: DataFrame,
-    edges: DataFrame,
-    max_iter: int,
-    fixed_rounds: int | None,
-    num_partitions: int | None,
-    salt_k: int,
-) -> DataFrame:
-    sym = edges.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
-        edges.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
-    if fixed_rounds is not None:
-        # no dedup shuffle on sym: min-aggregation is idempotent under
-        # duplicate edges, and candidate edges are already distinct pairs
-        # repartition BEFORE persist: the 3-way union otherwise caches with
-        # the summed partition count of its inputs (~5x shuffle.partitions
-        # of near-empty blocks), and every round re-reads all of them — a
-        # per-round fixed cost that is identical at every cluster size
-        # (profiled: the single largest serial-floor item). One hash
-        # exchange on the join key collapses it; rounds then join
-        # co-partitioned sides.
-        # partitions sized by the LINK GRAPH, not the cluster (callers pass
-        # edge-count-derived num_partitions): the loop is ~2 stage waves
-        # per round over graph-sized state, so surplus partitions are pure
-        # task-dispatch latency — a per-round fixed cost identical at
-        # every cluster size (the serial-floor shape again).
-        nparts = num_partitions or int(
-            nodes.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-        sym_id = (
-            sym.unionByName(
-                nodes.select(F.col("surface").alias("src"), F.col("surface").alias("dst"))
+        labels = nodes.select(F.col("surface"), F.col("surface").alias("component"))
+        for _ in range(ROUNDS):
+            labels = _propagate(sym_id, labels)
+        # labels is cut so the k-round prefix computes once; each check is
+        # one count over |linked surfaces| rows: one more round must
+        # change zero labels.
+        labels = labels.localCheckpoint(eager=False)
+        for _ in range(MAX_ROUNDS - ROUNDS):
+            nxt = _propagate(sym_id, labels).localCheckpoint(eager=False)
+            changed = (
+                nxt.join(labels.withColumnRenamed("component", "_old"), "surface")
+                .filter(F.col("component") != F.col("_old"))
+                .limit(1)
+                .count()
             )
-            .repartition(nparts, "dst")
-            .persist()  # reused every round inside the one consuming job
-        )
-        # try/finally: the cached symmetrized graph must not outlive this
-        # call on ANY path — success returns (the check job has already
-        # materialized labels' lazy checkpoint, so the result no longer
-        # needs the cache) or a failed check job (direct callers have no
-        # pipeline-level cache snapshot to clean up leaked graph-scale
-        # RDDs after a retry).
-        try:
-            labels = nodes.select(F.col("surface"), F.col("surface").alias("component"))
-            for _ in range(fixed_rounds):
-                labels = _propagate(sym_id, labels)
-            # convergence proof: one extra round must change zero labels.
-            # labels is cut so the k-round prefix computes once; the check
-            # is one count over |linked surfaces| rows.
-            labels = labels.localCheckpoint(eager=False)
-            rounds = fixed_rounds
-            while rounds < max_iter:
-                nxt = _propagate(sym_id, labels).localCheckpoint(eager=False)
-                changed = (
-                    nxt.join(labels.withColumnRenamed("component", "_old"), "surface")
-                    .filter(F.col("component") != F.col("_old"))
-                    .limit(1)
-                    .count()
-                )
-                if changed == 0:
-                    return labels
-                labels = nxt  # under-converged: keep propagating to fixpoint
-                rounds += 1
-            return labels
-        finally:
-            sym_id.unpersist()
-    nparts = num_partitions or int(
-        nodes.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    sym = sym.repartition(nparts, "dst").persist()
-    labels = nodes.select(F.col("surface"), F.col("surface").alias("component")).localCheckpoint()
-    for _ in range(max_iter):
-        # neighbor labels via one shuffle join; previous label rides along
-        # (as `old`) so convergence needs no second join.
-        nbr = sym.join(labels, sym.dst == labels.surface).select(
-            F.col("src").alias("surface"), "component", F.lit(None).cast("string").alias("old")
-        )
-        cand = labels.select("surface", "component", F.col("component").alias("old")).unionByName(nbr)
-        # two-level min: (surface, salt) then surface — hub surfaces never
-        # funnel their whole neighbor list through one reducer.
-        lvl1 = (
-            cand.withColumn("_salt", F.pmod(F.xxhash64("component"), F.lit(salt_k)))
-            .groupBy("surface", "_salt")
-            .agg(F.min("component").alias("component"), F.max("old").alias("old"))
-        )
-        new_labels = (
-            lvl1.groupBy("surface")
-            .agg(F.min("component").alias("component"), F.max("old").alias("old"))
-            .localCheckpoint()
-        )
-        changed = new_labels.filter(F.col("component") != F.col("old")).limit(1).count()
-        labels = new_labels.drop("old")
-        if changed == 0:
-            break
-    sym.unpersist()
-    return labels
+            if changed == 0:
+                break
+            labels = nxt  # diameter above ROUNDS: keep propagating
+        return labels
+    finally:
+        sym_id.unpersist()
+        spark.conf.set(conf_key, old_parts)
 
 
 def canonical_map(
@@ -289,7 +212,6 @@ def smush(
     s_col: str = "s",
     p_col: str = "p",
     o_col: str = "o",
-    max_iter: int = 25,
     broadcast_threshold: int = 2_000_000,
 ) -> DataFrame:
     """owl:sameAs smushing: rewrite every triple onto one canonical
@@ -323,13 +245,9 @@ def smush(
         .select(F.col("s").alias("a"), F.col("o").alias("b"))
         .filter(F.col("a") != F.col("b"))
         .dropDuplicates()
+        .localCheckpoint(eager=False)  # CC reads it three times
     )
-    nodes = (
-        sa.select(F.col("a").alias("surface"))
-        .unionAll(sa.select(F.col("b").alias("surface")))
-        .dropDuplicates()
-    )
-    comp = connected_components(nodes, sa, max_iter=max_iter)
+    comp = connected_components(sa)
     cmap = (
         comp.filter(F.col("surface") != F.col("component"))
         .select("surface", F.col("component").alias("_canon"))

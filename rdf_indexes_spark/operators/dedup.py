@@ -287,7 +287,6 @@ def near_dup_keep(
     pairs: DataFrame,
     id_col: str = "doc_id",
     weight_col: str | None = None,
-    materialize_pairs: bool = True,
 ) -> DataFrame:
     """Survivor selection — the final step of a near-dedup pipeline:
     cluster the near-duplicate PAIR graph with connected components and
@@ -301,33 +300,18 @@ def near_dup_keep(
     component max(struct(weight, -id)) aggregate over the PAIRED docs
     only — component-keyed, no window, no skewed reducer.
 
-    Reuses the KG engine's distributed CC operator (salted min-label,
-    operators/canonicalize.py) over the similarity graph — the same
-    scale shape as entity canonicalization: iterated state is the PAIRED
-    documents only, everything unpaired passes through via the left
-    anti-semantics below. ``pairs`` comes from any of the candidate
+    Reuses the KG engine's distributed CC operator (min-label
+    propagation, operators/canonicalize.py) over the similarity graph —
+    the same scale shape as entity canonicalization: iterated state is
+    the PAIRED documents only, everything unpaired passes through via the
+    left anti-semantics below. ``pairs`` comes from any of the candidate
     generators (minhash_lsh_pairs -> ngram_jaccard_pairs verify at
     scale; all-pairs ngram for oracle parity)."""
-    from .canonicalize import connected_components, edge_endpoints
+    from .canonicalize import connected_components
 
     # eager cut: the pair graph (often an expensive LSH/verify chain) is
-    # consumed three times below (endpoints x2, CC's symmetrization) —
-    # and the count that sizes the CC shuffle width by the PAIR GRAPH
-    # (not the cluster) comes free off the cache. Same sizing rationale
-    # as the pipeline's cc_parts: the CC loop's waves over a small graph
-    # at full shuffle width are pure dispatch latency.
-    # materialize_pairs=False: callers that ALREADY cached/checkpointed
-    # the pair frame themselves pass False to avoid a second
-    # materialization of the same data (the count below then runs
-    # against the caller's cache).
-    edges = pairs.select(F.col("a"), F.col("b"))
-    if materialize_pairs:
-        edges = edges.localCheckpoint(eager=True)
-    sc = docs.sparkSession.sparkContext
-    cc_parts = max(8, min(sc.defaultParallelism, edges.count() // 100_000 + 1))
-    comps = connected_components(
-        edge_endpoints(edges), edges, fixed_rounds=4, num_partitions=cc_parts
-    )
+    # read by CC's edge count, endpoints and symmetrization
+    comps = connected_components(pairs.select("a", "b").localCheckpoint())
     if weight_col is None:
         return (
             docs.select(F.col(id_col))

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from ..functions.ranking import dense_ids
 
 _POS = ["conv_id", "turn_idx", "mention_idx"]
+ROLES = [("s", "cs"), ("p", "pred"), ("o", "co")]
 
 
 def _pos_struct() -> Column:
@@ -58,6 +59,23 @@ def _vocab_freq(canonical_mentions: DataFrame, role_col: str) -> DataFrame:
         )
         .groupBy("term")
         .agg(F.count("*").alias("cnt"), F.min("_pos").alias("first_pos"))
+    )
+
+
+def role_freq(canonical_mentions: DataFrame) -> DataFrame:
+    """(role, term, cnt, first_pos) for all three roles at once: melt
+    (role, term, pos) via an exploded struct array (map-side), then ONE
+    groupBy shuffle for the three frequency tables together."""
+    melted = canonical_mentions.select(
+        F.explode(
+            F.array(
+                *[F.struct(F.lit(role).alias("role"), F.col(c).alias("term")) for role, c in ROLES]
+            )
+        ).alias("rt"),
+        _pos_struct().alias("_pos"),
+    ).select("rt.role", "rt.term", "_pos")
+    return melted.groupBy("role", "term").agg(
+        F.count("*").alias("cnt"), F.min("_pos").alias("first_pos")
     )
 
 
@@ -116,28 +134,14 @@ def build_vocabs(canonical_mentions: DataFrame) -> dict[str, DataFrame]:
 
 
 def build_vocabs_fused(canonical_mentions: DataFrame, with_ranked: bool = False):
-    """All three role vocabularies in ONE job chain: melt (role, term,
-    pos) via an exploded struct array (map-side), one groupBy shuffle for
-    the three frequency tables together, one grouped two-phase rank.
-    Identical ids to build_vocabs (ranks are computed per role), ~3x
-    fewer jobs — the id spaces stay fully independent
+    """All three role vocabularies in ONE job chain: the fused
+    role_freq aggregate, then one grouped two-phase rank. Identical ids
+    to build_vocabs (ranks are computed per role), ~3x fewer jobs — the
+    id spaces stay fully independent
     (/root/reference/scripts/extract_vocabs.py:29-31)."""
     from ..functions.ranking import dense_ids_grouped
 
-    melted = canonical_mentions.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(role).alias("role"), F.col(c).alias("term"))
-                    for role, c in [("s", "cs"), ("p", "pred"), ("o", "co")]
-                ]
-            )
-        ).alias("rt"),
-        _pos_struct().alias("_pos"),
-    ).select("rt.role", "rt.term", "_pos")
-    freq = melted.groupBy("role", "term").agg(
-        F.count("*").alias("cnt"), F.min("_pos").alias("first_pos")
-    )
+    freq = role_freq(canonical_mentions)
     # EAGER cut: the three role views feed three CONCURRENT broadcast
     # builds in encode_mentions — a lazy checkpoint caches only after the
     # first partition computes, so concurrent consumers would each re-run

@@ -57,15 +57,14 @@ def all_surfaces(mentions: DataFrame) -> DataFrame:
     )
 
 
-def candidate_edges(mentions: DataFrame, materialize: bool = True) -> DataFrame:
+def candidate_edges(mentions: DataFrame) -> DataFrame:
     """(a, b, score) candidate link edges, scored, thresholded.
 
-    materialize=True (default) eagerly localCheckpoints the two
-    mention-scan reductions (sameAs pairs; distinct surfaces). Both
-    outputs are vocabulary-sized, and cutting there (a) stops the
-    downstream self-join from re-running the full mention scans on both
-    sides, and (b) gives Catalyst real sizes so the reps join broadcasts.
-    Left as one fused lazy plan, the duplicated unmaterialized subtrees
+    The two mention-scan reductions (sameAs pairs; distinct surfaces)
+    get LAZY localCheckpoints: no separate materialization job, the
+    first consuming job computes and caches their partitions. Both
+    outputs are vocabulary-sized, and cutting there stops the downstream
+    self-join from re-running the full mention scans on both sides. Left as one fused lazy plan, the duplicated unmaterialized subtrees
     contend for execution memory and the stage degrades super-linearly
     with task concurrency (measured 75s fused vs 9s cut at local[32] on a
     2M-turn corpus)."""
@@ -74,14 +73,13 @@ def candidate_edges(mentions: DataFrame, materialize: bool = True) -> DataFrame:
         .select(F.col("subj").alias("a"), F.col("obj").alias("b"))
         .distinct()
         .withColumn("prior", F.lit(0.6))
+        .localCheckpoint(eager=False)
     )
-    surf = all_surfaces(mentions).withColumn("normkey", normalize_surface_col(F.col("surface")))
-    if materialize:
-        # lazy checkpoints: cut the plan (stopping subtree replication in
-        # the downstream self-join) WITHOUT a separate materialization job
-        # — the first consuming job computes and caches the partitions.
-        same = same.localCheckpoint(eager=False)
-        surf = surf.localCheckpoint(eager=False)
+    surf = (
+        all_surfaces(mentions)
+        .withColumn("normkey", normalize_surface_col(F.col("surface")))
+        .localCheckpoint(eager=False)
+    )
     # star edges to each block's min surface: one shuffle on normkey
     reps = surf.groupBy("normkey").agg(F.min("surface").alias("b"))
     norm_edges = (

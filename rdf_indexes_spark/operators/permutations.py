@@ -2,18 +2,17 @@
 
 The reference materializes five sorted text files via ``sort -n -u``
 (/root/reference/scripts/sort.py:6-10, dedup at sort time) and a 7-count
-stats file (/root/reference/scripts/build_stats.py:9-16). Here each
-permutation is a range-partitioned, within-partition-sorted Parquet table
-— Spark's sample-based RangePartitioner is the distributed external sort;
-Parquet min/max page stats then play the role of the reference's trie
-pointer arrays / Elias-Fano zone maps for pattern-query skipping.
+stats file (the reference's scripts/build_stats.py:9-16). Here all five
+permutations land in ONE Parquet table partitioned by a ``perm`` tag:
+rows are hash-partitioned on (perm, c1, c2) plus a salt for hub subjects
+(learned from the same range-length census the reference ships in
+include/stats.hpp:63-114, so one hub cannot serialize a writer) and
+sorted within partitions. Parquet min/max page stats then
+play the role of the reference's trie pointer arrays / Elias-Fano zone
+maps for pattern-query skipping.
 
-Dedup happens ONCE before the five sorts (one shuffle, reused), exactly
-the `sort -u` placement. SPO is additionally laid out by hashed subject
-(north rule): a ``s_bucket`` partition column; hub subjects (learned from
-the same range-length census the reference ships,
-/root/reference/include/stats.hpp:63-114) are salted across writer tasks
-so one hub cannot serialize a writer.
+Dedup happens ONCE before the sorts (one shuffle, reused), exactly the
+`sort -u` placement.
 """
 
 from __future__ import annotations
@@ -109,82 +108,6 @@ def hub_subjects(
         row = deg.agg(F.mean("deg").alias("m"), F.stddev_pop("deg").alias("sd")).first()
         min_degree = hub_threshold(row["m"], row["sd"])
     return top_hubs(deg, "deg", min_degree, max_hubs).select("s", "deg")
-
-
-def write_permutations(
-    triples: DataFrame,
-    out_dir: str,
-    num_partitions: int | None = None,
-    spo_buckets: int = 16,
-    hub_salt: int = 8,
-) -> dict[str, str]:
-    """Write the five sorted permutation tables; returns name → path.
-
-    Every table keeps canonical (s, p, o) column names — a permutation is
-    a ROW order (plus, for text export, a column order;
-    /root/reference/include/util_types.hpp:80-110 reorders back to
-    canonical on read, we simply never leave canonical naming).
-    """
-    spark = triples.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    base = triples.persist()
-    hubs = F.broadcast(hub_subjects(base).select("s").withColumn("_is_hub", F.lit(True)))
-
-    def _write(name: str) -> tuple[str, str]:
-        keys = PERM_ORDERS[name]
-        path = os.path.join(out_dir, name)
-        if name == "spo":
-            # hashed-subject layout + hub salting (north rule): hubs spread
-            # across `hub_salt` writer tasks, cold subjects stay co-located.
-            salted = (
-                base.join(hubs, "s", "left")
-                .withColumn("s_bucket", F.pmod(F.xxhash64("s"), F.lit(spo_buckets)))
-                .withColumn(
-                    "_salt",
-                    F.when(
-                        F.col("_is_hub").isNotNull(),
-                        F.pmod(F.xxhash64("s", "p", "o"), F.lit(hub_salt)),
-                    ).otherwise(F.lit(0)),
-                )
-                .repartition(n, "s_bucket", "_salt")
-                .sortWithinPartitions("s", "p", "o")
-                .drop("_is_hub", "_salt")
-            )
-            salted.write.mode("overwrite").partitionBy("s_bucket").parquet(path)
-        else:
-            # hash on the LEADING KEY PAIR + sort within partitions. The
-            # query surface is equality-only (9 patterns), so hash layout
-            # loses nothing vs range layout — sorted row groups give tight
-            # min/max stats on the leading keys for scan pruning — and it
-            # drops the RangePartitioner's sampling pass: one fewer full
-            # scan per permutation, which at 100 TB is 5 saved scans per
-            # build. Pair (not single) leading key: the first column alone
-            # can be low-cardinality/hub-heavy (40 predicates for pos/pso),
-            # the pair spreads those groups across reducers.
-            (
-                base.repartition(n, F.col(keys[0]), F.col(keys[1]))
-                .sortWithinPartitions(*keys)
-                .write.mode("overwrite")
-                .parquet(path)
-            )
-        return name, path
-
-    paths = dict(_write(name) for name in PERM_ORDERS)
-    base.unpersist()
-    return paths
-
-
-TRIPLE_SCHEMA = "s long, p long, o long"
-
-
-def read_permutations(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:
-    # explicit schema: an empty corpus writes zero part files, which would
-    # otherwise fail schema inference (partition columns like s_bucket are
-    # appended by partition discovery and dropped by the select).
-    return {
-        name: spark.read.schema(TRIPLE_SCHEMA).parquet(os.path.join(out_dir, name)).select("s", "p", "o")
-        for name in PERM_ORDERS
-    }
 
 
 def write_permutations_unified(
@@ -326,24 +249,21 @@ def write_permutations_unified(
 
 
 def read_permutations_unified(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:
-    """Read back the unified layout as canonical (s, p, o) tables.
-    Handles both the current tinyint-perm/int32 layout and the legacy
-    string-perm/long one (schema read from footers; empty corpora write
-    zero files, so fall back to a typed empty relation)."""
+    """Read back the unified layout as canonical (s, p, o) tables. The
+    int32 and 64-bit component layouts both read as long (the schema
+    comes from the footers); empty corpora write zero files, so fall back
+    to a typed empty relation."""
     try:
         base = spark.read.parquet(out_dir)
-        dt = {f.name: f.dataType.simpleString() for f in base.schema.fields}
     except Exception:
         base = None
-    if base is None or "perm" not in dt:
+    if base is None or "perm" not in base.columns:
         base = spark.range(0).select(
             F.lit(None).cast("long").alias("c1"),
             F.lit(None).cast("long").alias("c2"),
             F.lit(None).cast("long").alias("c3"),
             F.lit(None).cast("int").alias("perm"),
         )
-        dt = {"perm": "int"}
-    perm_is_str = dt["perm"] == "string"
     # reduced variants: only perms actually on disk enter the dict — the
     # router treats a MISSING table as "fall back", an EMPTY one as truth.
     present = set()
@@ -352,10 +272,9 @@ def read_permutations_unified(spark: SparkSession, out_dir: str) -> dict[str, Da
             present.add(entry.split("=", 1)[1])
     out = {}
     for name, keys in PERM_ORDERS.items():
-        if present and name not in present and str(PERM_IDS[name]) not in present:
+        if present and str(PERM_IDS[name]) not in present:
             continue
-        tag = F.lit(name) if perm_is_str else F.lit(PERM_IDS[name])
-        df = base.filter(F.col("perm") == tag)
+        df = base.filter(F.col("perm") == F.lit(PERM_IDS[name]))
         out[name] = df.select(
             *[F.col(f"c{i+1}").cast("long").alias(k) for i, k in enumerate(keys)]
         ).select("s", "p", "o")
@@ -546,18 +465,10 @@ def space_stats(spark: SparkSession, out_dir: str, num_triples: int) -> DataFram
     rows = []
     for name in PERM_ORDERS:
         total = 0
-        for root in (
-            os.path.join(out_dir, f"perm={PERM_IDS[name]}"),
-            os.path.join(out_dir, f"perm={name}"),
-            os.path.join(out_dir, name),
-        ):
-            if os.path.isdir(root):
-                for dirpath, _, files in os.walk(root):
-                    total += sum(
-                        os.path.getsize(os.path.join(dirpath, f))
-                        for f in files
-                        if f.endswith(".parquet")
-                    )
+        for dirpath, _, files in os.walk(os.path.join(out_dir, f"perm={PERM_IDS[name]}")):
+            total += sum(
+                os.path.getsize(os.path.join(dirpath, f)) for f in files if f.endswith(".parquet")
+            )
         bpt = (total * 8.0 / num_triples) if num_triples else 0.0
         rows.append((name, total, round(bpt, 2)))
     from ..functions.ranking import _literal_df

@@ -26,12 +26,7 @@ from .checkpoint import MANIFEST, StageStore, _fingerprint, read_manifest, write
 from .lexicon import SAME_AS
 from .operators import encode as enc
 from .operators import permutations as perm
-from .operators.canonicalize import (
-    canonical_map,
-    canonicalize_mentions,
-    connected_components,
-    edge_endpoints,
-)
+from .operators.canonicalize import canonical_map, canonicalize_mentions, connected_components
 from .operators.extract import extract_mentions
 from .operators.link import candidate_edges
 from pyspark.sql import functions as F
@@ -86,27 +81,16 @@ def _vocab_hints(ranked: DataFrame, vocab_s: DataFrame):
     return sizes, hubs, downcast
 
 
-def build_canonical_map(mentions: DataFrame, n: int) -> DataFrame:
+def build_canonical_map(mentions: DataFrame) -> DataFrame:
     """mentions → (surface, canonical): link edges, connected components
-    over the link graph, one representative per component.
-
-    ``n`` caps the CC loop's partitions. The loop is sized by the edge
-    count (one cheap count over the checkpointed edges), not the cluster:
-    its waves over a tiny graph at full shuffle width are pure dispatch
-    latency."""
+    over the link graph, one representative per component."""
     facts = mentions.filter(F.col("pred") != SAME_AS)
-    # eager cut: edges feed the endpoints, the CC rounds and the count
-    edges = candidate_edges(mentions).localCheckpoint()
-    cc_parts = max(8, min(n, edges.count() // 100_000 + 1))
+    # eager cut: CC reads the edges three times, and the cut keeps the
+    # link scoring in its own job
+    edges = candidate_edges(mentions).select("a", "b").localCheckpoint()
     # CC over edge ENDPOINTS only: every other surface maps to itself via
-    # canonicalize_mentions' left join + coalesce. The link graph is stars
-    # and short chains; if 4 rounds leave a label moving, the loop's
-    # convergence check continues to the fixpoint.
-    comps = connected_components(
-        edge_endpoints(edges), edges.select("a", "b"), fixed_rounds=4,
-        num_partitions=cc_parts,
-    )
-    return canonical_map(facts, comps)
+    # canonicalize_mentions' left join + coalesce
+    return canonical_map(facts, connected_components(edges))
 
 
 @dataclass
@@ -140,7 +124,7 @@ def run_pipeline(
 
     facts = mentions.filter(F.col("pred") != SAME_AS)
 
-    cmap, fp_c = store.run("canonical_map", [fp_m], lambda: build_canonical_map(mentions, n))
+    cmap, fp_c = store.run("canonical_map", [fp_m], lambda: build_canonical_map(mentions))
 
     canon, fp_cm = store.run(
         "canonical_mentions", [fp_c], lambda: canonicalize_mentions(facts, cmap)

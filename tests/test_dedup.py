@@ -372,18 +372,3 @@ def test_keep_best_golden(spark):
         keep_best(df, [], "score")
     with pytest.raises(ValueError):
         keep_best(df, ["url"], "url")
-
-
-def test_near_dup_keep_no_materialize_equivalent(spark):
-    """materialize_pairs=False (caller already cached the pair frame)
-    must select the identical survivor set."""
-    from rdf_indexes_spark.operators.dedup import near_dup_keep
-
-    edges = [(i, i + 1) for i in range(9)] + [(12, 17)]
-    docs = spark.range(20).selectExpr("id as doc_id")
-    pairs = spark.createDataFrame(edges, "a long, b long").localCheckpoint()
-    a = sorted(r[0] for r in near_dup_keep(docs, pairs).collect())
-    b = sorted(
-        r[0] for r in near_dup_keep(docs, pairs, materialize_pairs=False).collect()
-    )
-    assert a == b

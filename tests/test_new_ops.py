@@ -376,27 +376,6 @@ def test_reduced_variant_build_answers_all_patterns(spark, triples, workdir):
         assert got.equals(want), f"mask {mask}"
 
 
-def test_hashed_subject_layout_roundtrip(spark, triples, workdir):
-    """The north-rule SPO layout: partitioned by hashed subject
-    (s_bucket dirs on disk), hub rows salted across writers; all five
-    per-perm tables round-trip to the same triple set."""
-    from rdf_indexes_spark.operators.permutations import (
-        read_permutations,
-        write_permutations,
-    )
-
-    out = os.path.join(workdir, "perms_bucketed")
-    paths = write_permutations(triples, out, num_partitions=4, spo_buckets=8)
-    assert set(paths) == {"spo", "pos", "osp", "ops", "pso"}
-    buckets = [d for d in os.listdir(os.path.join(out, "spo")) if d.startswith("s_bucket=")]
-    assert len(buckets) > 1  # hashed-subject partition dirs exist
-    tables = read_permutations(spark, out)
-    want = triples.toPandas().sort_values(["s", "p", "o"]).reset_index(drop=True)
-    for name, df in tables.items():
-        got = df.toPandas().sort_values(["s", "p", "o"]).reset_index(drop=True)
-        assert got.equals(want), name
-
-
 def test_hash_id_pipeline_uses_wide_layout(spark, transcripts, workdir):
     """--hash mode end-to-end: xxhash64 ids are 64-bit (and negative), so
     the unified write must auto-detect downcast=False and take the plain

@@ -134,32 +134,22 @@ def test_resume_skips_completed_stages(spark, transcripts, workdir, artifacts):
 
 
 def test_cc_fixed_rounds_converges_on_long_chain(spark):
-    """fixed_rounds below the component diameter must NOT under-merge: the
-    post-rounds convergence check detects moving labels and continues to
-    the fixpoint. Chain a0-a1-...-a12 (diameter 12) with fixed_rounds=4
+    """Fewer lazy rounds than the component diameter must NOT under-merge:
+    the post-rounds convergence check detects moving labels and continues
+    to the fixpoint. Chain a0-a1-...-a12 (diameter 12, above ROUNDS=4)
     must still collapse to one component labeled a00."""
-    from pyspark.sql import functions as F
-
-    from rdf_indexes_spark.operators.canonicalize import (
-        connected_components,
-        edge_endpoints,
-    )
+    from rdf_indexes_spark.operators.canonicalize import ROUNDS, connected_components
 
     n = 13
+    assert n - 1 > ROUNDS
     names = [f"a{i:02d}" for i in range(n)]
     edges = spark.createDataFrame(
         [(names[i], names[i + 1]) for i in range(n - 1)], "a string, b string"
-    )
-    comps = connected_components(edge_endpoints(edges), edges, fixed_rounds=4)
-    got = comps.toPandas()
-    assert set(got["component"]) == {"a00"}
+    ).localCheckpoint()
+    got = connected_components(edges).toPandas()
     assert len(got) == n
-
-    # sanity: the converged-in-k case returns identical labels to fixpoint
-    comps_fp = connected_components(edge_endpoints(edges), edges)
-    pd_fp = comps_fp.toPandas().sort_values("surface").reset_index(drop=True)
-    pd_fx = got.sort_values("surface").reset_index(drop=True)
-    assert pd_fp.equals(pd_fx)
+    assert set(got["surface"]) == set(names)
+    assert set(got["component"]) == {"a00"}
 
 
 def test_vocab_freq_plan_no_corpus_join(spark, transcripts):
@@ -317,7 +307,6 @@ def test_canonicalize_no_broadcast_paths_identical(spark, transcripts):
         canonical_map,
         canonicalize_mentions,
         connected_components,
-        edge_endpoints,
     )
     from pyspark.sql import functions as F
 
@@ -326,10 +315,8 @@ def test_canonicalize_no_broadcast_paths_identical(spark, transcripts):
 
     mentions = extract_mentions(transcripts).localCheckpoint()
     facts = mentions.filter(F.col("pred") != SAME_AS)
-    edges = candidate_edges(mentions).localCheckpoint()
-    comps = connected_components(
-        edge_endpoints(edges), edges.select("a", "b"), fixed_rounds=4
-    ).localCheckpoint()
+    edges = candidate_edges(mentions).select("a", "b").localCheckpoint()
+    comps = connected_components(edges).localCheckpoint()
 
     cmap_bc = canonical_map(facts, comps)
     cmap_sh = canonical_map(facts, comps, broadcast_components=False)

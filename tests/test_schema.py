@@ -312,6 +312,14 @@ def test_smush_int_ids(spark):
     got = {(r.s, r.p, r.o) for r in smush(df, 0).collect()}
     assert got == {(100, 1, 3), (3, 1, 100)}
 
+    # a 12-hop sameAs chain 50-51-...-62 is wider than CC's lazy rounds:
+    # the convergence check must carry every member to the class minimum
+    chain = [(50 + i + 1, 0, 50 + i) for i in range(12)]
+    facts = [(50 + i, 2, 200 + i) for i in range(13)] + [(300, 3, 62)]
+    df = spark.createDataFrame(chain + facts, "s long, p long, o long")
+    got = {(r.s, r.p, r.o) for r in smush(df, 0).collect()}
+    assert got == {(50, 2, 200 + i) for i in range(13)} | {(300, 3, 50)}
+
 
 def test_rhodf_entailment_golden(spark):
     """Hand-checked ρdf closure: rdfs7 property expansion through a
