@@ -630,7 +630,7 @@ def _q_kg_triples_oracle(spark, sf_dir):
     construction, so the oracle's closure is a single symmetric join)."""
     from rdf_indexes_spark.lexicon import SAME_AS
     from rdf_indexes_spark.operators.canonicalize import canonicalize_mentions
-    from rdf_indexes_spark.operators.encode import build_vocabs_fused, encode_mentions
+    from rdf_indexes_spark.operators.encode import build_vocabs_fused, encode_mentions, role_vocabs
     from rdf_indexes_spark.operators.extract import extract_mentions
     from rdf_indexes_spark.operators.permutations import dedup_triples
     from rdf_indexes_spark.pipeline import build_canonical_map
@@ -647,8 +647,7 @@ def _q_kg_triples_oracle(spark, sf_dir):
     facts = mentions.filter(F.col("pred") != SAME_AS)
     cmap = build_canonical_map(mentions)
     canon = canonicalize_mentions(facts, cmap)
-    vocabs = build_vocabs_fused(canon)
-    encoded, _ = encode_mentions(canon, vocabs)
+    encoded, _ = encode_mentions(canon, role_vocabs(build_vocabs_fused(canon)))
     return dedup_triples(encoded).select("s", "p", "o")
 
 

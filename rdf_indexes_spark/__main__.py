@@ -58,11 +58,12 @@ def cmd_build(args) -> int:
             # re-hashes an already-hashed vocab when BOTH scripts get
             # --hash, which can never match — we pair the hashed vocab
             # with single-hashed lookups instead). Hash ONCE, checkpoint,
-            # and build the vocabs from the hashed frame with the normal
+            # and rank the hashed frame with the normal fused
             # freq-desc/first-occurrence rank (build_vocab's mmh3 branch
-            # is exactly hash-then-rank, so ids are identical by
-            # construction) — the per-row-Python MurmurHash is the repo's
-            # slowest UDF and must not re-run per downstream action.
+            # is exactly hash-then-rank, and ranks are computed per role,
+            # so ids are identical by construction) — the per-row-Python
+            # MurmurHash is the repo's slowest UDF and must not re-run per
+            # downstream action.
             from pyspark.sql.functions import pandas_udf
 
             from .functions.mmh3_compat import hash64_unsigned_str
@@ -74,10 +75,7 @@ def cmd_build(args) -> int:
                 .withColumn("co", mm("co"))
                 .localCheckpoint(eager=False)
             )
-            vocabs = {
-                role: enc.build_vocab(mentions, col)
-                for role, col in [("s", "cs"), ("p", "pred"), ("o", "co")]
-            }
+            vocabs = enc.role_vocabs(enc.build_vocabs_fused(mentions))
         elif args.hash:
             mentions = mentions.localCheckpoint(eager=False)  # 3 vocab scans
             vocabs = {
@@ -85,7 +83,7 @@ def cmd_build(args) -> int:
                 for role, col in [("s", "cs"), ("p", "pred"), ("o", "co")]
             }
         else:
-            vocabs = enc.build_vocabs_fused(mentions)
+            vocabs = enc.role_vocabs(enc.build_vocabs_fused(mentions))
         encoded, quarantine = enc.encode_mentions(mentions, vocabs)
         nq = quarantine.count()
         if nq:

@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .checkpoint import MANIFEST, write_manifest
-from .functions.ranking import _literal_df, dense_ids_grouped
+from .functions.ranking import _literal_df
 from .lexicon import SAME_AS
 from .operators import encode as enc
 from .operators import permutations as perm
@@ -113,15 +113,12 @@ def _delta_canonical_mentions(transcripts: DataFrame) -> tuple[DataFrame, int]:
 
 
 def _perms_width_is_int32(spark: SparkSession, perms_dir: str) -> bool | None:
-    """Component width of the existing layout (None: no files yet)."""
-    try:
-        dt = {
-            f.name: f.dataType.simpleString()
-            for f in spark.read.parquet(perms_dir).schema.fields
-        }
-        return dt.get("c1") == "int"
-    except Exception:
+    """Component width of the existing layout (None: no files yet; an
+    unreadable file raises)."""
+    if not perm.has_parquet(perms_dir):
         return None
+    dt = {f.name: f.dataType.simpleString() for f in spark.read.parquet(perms_dir).schema}
+    return dt.get("c1") == "int"
 
 
 def _base_sketch_path(workdir: str) -> str:
@@ -197,10 +194,7 @@ def merge_delta(
         new_freq = freq.join(
             base_ranked.select("role", "term"), ["role", "term"], "left_anti"
         )
-        new_ranked = dense_ids_grouped(
-            new_freq, "role", [F.desc("cnt"), F.asc("first_pos")], id_col="_rk",
-            eager=True,
-        )
+        new_ranked = enc.rank_roles(new_freq)
         off = _literal_df(
             spark,
             [(role, sizes[role]) for role, _ in enc.ROLES],
@@ -210,7 +204,7 @@ def merge_delta(
             new_ranked.join(F.broadcast(off), "role")
             .select(
                 "role", "term", "cnt",
-                (F.col("_rk") + F.col("_base")).cast("long").alias("id"),
+                (F.col("id") + F.col("_base")).cast("long").alias("id"),
             )
             .localCheckpoint()  # consumed by count, union, and the write
         )
@@ -227,11 +221,9 @@ def merge_delta(
     merged_sizes = {role: sizes[role] + new_terms.get(role, 0) for role, _ in enc.ROLES}
 
     # --- encode against the frozen+extended dictionaries -----------------
-    vocabs = {
-        role: merged_ranked.filter(F.col("role") == role).select("term", "id", "cnt")
-        for role, _ in enc.ROLES
-    }
-    encoded, quarantine = enc.encode_mentions(canon, vocabs, sizes=merged_sizes)
+    encoded, quarantine = enc.encode_mentions(
+        canon, enc.role_vocabs(merged_ranked), sizes=merged_sizes
+    )
     n_quarantined = quarantine.count() if not extend_vocab else 0
     delta_triples = (
         perm.dedup_triples(encoded)
@@ -248,8 +240,10 @@ def merge_delta(
         downcast = max_id < 2**31
     elif width_int32 and max_id >= 2**31:
         raise NotImplementedError(
-            "id space crossed 2^31: the int32 layout needs a full rewrite — "
-            "run compact() with downcast=False"
+            "id space crossed 2^31: the index's int32 layout cannot hold the "
+            "new ids and needs a full rebuild (run_pipeline over the whole "
+            "corpus); compact() rewrites only the landed triples, whose ids "
+            "still fit int32, so it keeps the int32 layout"
         )
     else:
         downcast = width_int32

@@ -6,16 +6,18 @@ is ``row_number().over(Window.orderBy(...))`` — a single-partition window
 that serializes the whole table through one task and cannot work at
 10^12-row scale.
 
-Instead: two-phase rank.
-  1. range-repartition by the order keys (Spark's sample-based
-     RangePartitioner = distributed external sort), persist so partition
-     assignment is stable across the two jobs;
-  2. count rows per partition (tiny driver-side collect, one long per
-     partition), exclusive prefix-sum → per-partition id offset;
+Instead: two-phase rank (``dense_ids``).
+  1. range-repartition by the (optional group key, order) keys (Spark's
+     sample-based RangePartitioner = distributed external sort), persist
+     so partition assignment is stable across the two jobs;
+  2. count rows per (group, partition) (tiny driver-side collect),
+     exclusive prefix-sum per group → per-partition id offset;
   3. per-partition row_number (Window.partitionBy(spark_partition_id) —
      parallel, no global shuffle) + broadcast-joined offset.
 
 Total cost: one range shuffle + one tiny collect; no single-task stage.
+``grouped_rank`` is the same plan with the offsets computed distributedly,
+for group counts too large for the driver.
 """
 
 from __future__ import annotations
@@ -56,33 +58,56 @@ def dense_ids(
     df: DataFrame,
     order_cols: list[Column | str],
     id_col: str = "id",
+    group_col: str | None = None,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Add ``id_col``: dense 0..n-1 ranks in the total order of order_cols.
+    """Add ``id_col``: dense 0..n-1 ranks in the total order of order_cols,
+    independently per value of ``group_col`` when one is given (the three
+    vocab roles rank in ONE pass: one range shuffle, one tiny collect).
 
-    Rows must be unique in the order keys for the ids to be a permutation
-    (vocab terms are). Keys equal under the order land in the same range
-    partition, so ranking is still total and deterministic.
-    """
+    Rows must be unique in the (group, order) keys for the ids to be a
+    permutation (vocab terms are). Keys equal under the order land in the
+    same range partition, so ranking is still total and deterministic.
+
+    The result is always materialized (eager localCheckpoint, safe for
+    concurrent downstream consumers) and the two intermediate caches are
+    dropped before returning, so looping callers don't accumulate
+    agg-output-sized frames in executor memory."""
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    # eager cut BEFORE the range exchange: the RangePartitioner runs a
-    # sampling pass that executes the child plan, then the exchange
-    # executes it AGAIN — for a df that is itself an aggregation (vocab
-    # frequency), that doubles the heaviest upstream stage. The ranked
-    # input is agg-output-sized, so the cut is cheap at any scale.
-    df = df.localCheckpoint(eager=True)
-    ranged = df.repartitionByRange(n, *order_cols).withColumn("_pid", F.spark_partition_id())
-    ranged = ranged.persist()
-    counts = {r["_pid"]: r["cnt"] for r in ranged.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()}
-    offsets, acc = [], 0
-    for pid in sorted(counts):
-        offsets.append((pid, acc))
-        acc += counts[pid]
-    off_df = _literal_df(df.sparkSession, offsets, [("_pid", "int"), ("_off", "long")])
-    w = Window.partitionBy("_pid").orderBy(*order_cols)
+    keys = [group_col] if group_col else []
+    # cache the input once: the RangePartitioner's sampling pass executes
+    # the child plan and the exchange executes it AGAIN — for a df that is
+    # itself an aggregation (vocab frequency), that would double the
+    # heaviest upstream stage. A persist makes the second execution a
+    # cache hit and, unlike localCheckpoint, can be dropped below.
+    df = df.persist()
+    # persist: the range shuffle is reused by the counts collect AND the
+    # output join below, and partition assignment must be STABLE across
+    # the two jobs.
+    ranged = (
+        df.repartitionByRange(n, *keys, *order_cols)
+        .withColumn("_pid", F.spark_partition_id())
+        .persist()
+    )
+    rows = ranged.groupBy(*keys, "_pid").agg(F.count("*").alias("cnt")).collect()
+    by_group: dict = {}
+    for r in rows:
+        g = tuple(r[k] for k in keys)
+        by_group.setdefault(g, []).append((r["_pid"], r["cnt"]))
+    offsets = []
+    for g, lst in by_group.items():
+        acc = 0
+        for pid, cnt in sorted(lst):
+            offsets.append((*g, pid, acc))
+            acc += cnt
+    schema = [(k, df.schema[k].dataType.simpleString()) for k in keys]
+    off_df = _literal_df(
+        df.sparkSession, offsets, [*schema, ("_pid", "int"), ("_off", "long")]
+    )
+    w = Window.partitionBy(*keys, "_pid").orderBy(*order_cols)
     out = (
         ranged.withColumn("_rn", F.row_number().over(w) - 1)
-        .join(F.broadcast(off_df), "_pid")
+        .join(F.broadcast(off_df), [*keys, "_pid"])
         .withColumn(id_col, (F.col("_rn") + F.col("_off")).cast("long"))
         .drop("_pid", "_rn", "_off")
     )
@@ -96,72 +121,10 @@ def dense_ids(
     # partitionings that no longer match the one offsets dict (measured:
     # 8658/9973 wrong ranks + lost join rows at sf0.1). The eager cut
     # pins one physical (term, rank) table for every consumer; output is
-    # vocab-scale, so the extra materialization is agg-output-sized.
+    # agg-output-sized, so the extra materialization is cheap.
     out = out.localCheckpoint(eager=True)
     ranged.unpersist()
-    return out
-
-
-def dense_ids_grouped(
-    df: DataFrame,
-    group_col: str,
-    order_cols: list[Column | str],
-    id_col: str = "id",
-    num_partitions: int | None = None,
-    eager: bool = False,
-) -> DataFrame:
-    """dense_ids, independently per value of ``group_col``, in ONE pass:
-    range-partition by (group, order...), per-(group, partition) counts →
-    driver prefix-sum per group → partition-local row_number + offset.
-
-    Used to rank the three vocab roles (s/p/o) with a single shuffle +
-    a single tiny collect instead of three separate rank pipelines.
-
-    eager=True materializes the result (eager localCheckpoint — safe for
-    concurrent downstream consumers) and UNPERSISTS the two intermediate
-    caches before returning, so looping callers don't accumulate
-    vocab-scale frames in executor memory. eager=False returns lazily and
-    the intermediates stay cached (the output plan reads them)."""
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    # cache the input once: the RangePartitioner's sampling pass executes
-    # the child plan and the exchange executes it AGAIN — a persist makes
-    # the second execution a cache hit (and, unlike localCheckpoint, can
-    # be dropped in the eager branch below).
-    df = df.persist()
-    ranged = df.repartitionByRange(n, F.col(group_col), *order_cols).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    # persist: the range shuffle is reused by the counts collect AND the
-    # output join below, and partition assignment must be STABLE across
-    # the two jobs.
-    ranged = ranged.persist()
-    rows = (
-        ranged.groupBy(group_col, "_pid").agg(F.count("*").alias("cnt")).collect()
-    )
-    by_group: dict = {}
-    for r in rows:
-        by_group.setdefault(r[group_col], []).append((r["_pid"], r["cnt"]))
-    offsets = []
-    for g, lst in by_group.items():
-        acc = 0
-        for pid, cnt in sorted(lst):
-            offsets.append((g, pid, acc))
-            acc += cnt
-    group_type = df.schema[group_col].dataType.simpleString()
-    off_df = _literal_df(
-        df.sparkSession, offsets, [(group_col, group_type), ("_pid", "int"), ("_off", "long")]
-    )
-    w = Window.partitionBy(group_col, "_pid").orderBy(*order_cols)
-    out = (
-        ranged.withColumn("_rn", F.row_number().over(w) - 1)
-        .join(F.broadcast(off_df), [group_col, "_pid"])
-        .withColumn(id_col, (F.col("_rn") + F.col("_off")).cast("long"))
-        .drop("_pid", "_rn", "_off")
-    )
-    if eager:
-        out = out.localCheckpoint(eager=True)
-        ranged.unpersist()
-        df.unpersist()
+    df.unpersist()
     return out
 
 
@@ -174,9 +137,9 @@ def grouped_rank(
 ) -> DataFrame:
     """Dense 0..k-1 rank of each row WITHIN its group, in order_cols order
     — with NO driver-side state and NO per-group single task, for use when
-    the group count itself is data-scale (dense_ids_grouped collects one
-    offset row per (group, partition) to the driver — right for 3 vocab
-    roles, wrong for 10^9 distinct objects).
+    the group count itself is data-scale (dense_ids(group_col=...)
+    collects one offset row per (group, partition) to the driver — right
+    for 3 vocab roles, wrong for 10^9 distinct objects).
 
     Plan: range-partition by (group, order...) so each group's rows are
     contiguous across partitions; rank locally per (group, partition);

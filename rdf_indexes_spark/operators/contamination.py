@@ -39,34 +39,13 @@ def tokens(text_col: str):
     return F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
 
 
-def ngram_list(text_col: str, n: int):
-    """Array of ALL space-joined token n-grams of ``text_col`` in text
-    order (index k holds the gram starting at 1-based token k+1).
-
-    Documents with fewer than n tokens contribute no n-grams. Pure
-    column expression (codegen); 1-based F.slice with a lambda index.
-    """
-    toks = tokens(text_col)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1)),
-        lambda i: F.array_join(F.slice(toks, i, n), " "),
-    )
-    return F.when(F.size(toks) >= n, grams).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def ngram_set(text_col: str, n: int):
-    """DISTINCT n-grams of ``text_col`` (order not meaningful)."""
-    return F.array_distinct(ngram_list(text_col, n))
-
-
 def ngram_key_array(text_col: str, n: int, hashed: bool = True, with_pos: bool = False):
-    """One-pass n-gram KEY array — the hot-path twin of
-    :func:`ngram_list` for consumers that only need gram keys (hashes or
-    strings), not the text-order gram strings themselves.
+    """One-pass n-gram KEY array: the space-joined token n-grams of
+    ``text_col`` in text order (documents with fewer than n tokens
+    contribute none), as xxhash64 keys (``hashed``) or strings.
 
-    Two measured pathologies of the naive ``ngram_list`` shape at scale:
+    Two measured pathologies of the naive shape (``F.transform`` over
+    ``F.slice`` of the ``tokens`` column) at scale:
     (a) the position lambda references the ``split()`` expression
     INLINE, so Catalyst re-evaluates the whole-text tokenization once
     per gram position (~4× CPU at n=8); (b) gram strings materialize
@@ -74,8 +53,8 @@ def ngram_key_array(text_col: str, n: int, hashed: bool = True, with_pos: bool =
     generate + exchange). Here the split is bound once as an outer
     LAMBDA VARIABLE (``array(split(..)) → transform``) and the xxhash64
     is applied INSIDE the same expression, so only 8-byte longs leave
-    the projection. Same normalization and gram contract as
-    :func:`ngram_list` (verified hashed ≡ raw in tests).
+    the projection. Same normalization as :func:`tokens` (verified
+    hashed ≡ raw in tests).
 
     with_pos=True returns array<struct<start,g>> (1-based gram start),
     for span-level consumers.

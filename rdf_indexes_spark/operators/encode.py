@@ -7,6 +7,8 @@ Reference semantics reproduced exactly:
   occurrence in corpus scan order (stable sort + insertion-order dicts,
   /root/reference/scripts/extract_vocabs.py:64-67,
   /root/reference/scripts/map_dataset.py:16-26);
+  the rule is written once, in ``_id_order``, which the base build,
+  ``build_vocab`` and delta ingest (via ``rank_roles``) all rank by;
 - frequency counted over the raw (duplicate-retaining) stream;
 - encode = dict probe per component ≙ three broadcast hash joins; terms
   missing from a vocab are dropped-with-log (quarantine DataFrame), the
@@ -47,6 +49,13 @@ def _pos_struct() -> Column:
     return F.struct("conv_id", "turn_idx", "mention_idx")
 
 
+def _id_order() -> list[Column]:
+    """THE vocab id rule: descending frequency, ties by first occurrence
+    (the reference's extract_vocabs.py, see the module docstring). A
+    function, not a constant: building a Column needs a live session."""
+    return [F.desc("cnt"), F.asc("first_pos")]
+
+
 def _vocab_freq(canonical_mentions: DataFrame, role_col: str) -> DataFrame:
     """(term, cnt, first_pos) for one role: single two-phase aggregation
     over the mention stream — partial SortAggregate per input partition
@@ -77,6 +86,23 @@ def role_freq(canonical_mentions: DataFrame) -> DataFrame:
     return melted.groupBy("role", "term").agg(
         F.count("*").alias("cnt"), F.min("_pos").alias("first_pos")
     )
+
+
+def rank_roles(freq: DataFrame) -> DataFrame:
+    """A ``role_freq``-shaped frame plus ``id``: dense ids per role in
+    ``_id_order``, all three roles in one grouped two-phase rank. The id
+    spaces stay fully independent, as in the reference's three vocab
+    files. The result is materialized: the role views feed concurrent broadcast builds in
+    encode_mentions, which would each re-run a lazy rank tail."""
+    return dense_ids(freq, _id_order(), group_col="role")
+
+
+def role_vocabs(ranked: DataFrame) -> dict[str, DataFrame]:
+    """{role: (term, id, cnt)} views of a ranked (role, term, cnt, id) frame."""
+    return {
+        role: ranked.filter(F.col("role") == role).select("term", "id", "cnt")
+        for role, _ in ROLES
+    }
 
 
 def build_vocab(
@@ -117,50 +143,15 @@ def build_vocab(
         )
         return freq.select("term", F.xxhash64("term").alias("id"), "cnt")
     freq = _vocab_freq(canonical_mentions, role_col)
-    ranked = dense_ids(
-        freq,
-        [F.desc("cnt"), F.asc("first_pos")],
-        id_col="id",
-    )
-    return ranked.select("term", "id", "cnt")
+    return dense_ids(freq, _id_order()).select("term", "id", "cnt")
 
 
-def build_vocabs(canonical_mentions: DataFrame) -> dict[str, DataFrame]:
-    return {
-        "s": build_vocab(canonical_mentions, "cs"),
-        "p": build_vocab(canonical_mentions, "pred"),
-        "o": build_vocab(canonical_mentions, "co"),
-    }
-
-
-def build_vocabs_fused(canonical_mentions: DataFrame, with_ranked: bool = False):
-    """All three role vocabularies in ONE job chain: the fused
-    role_freq aggregate, then one grouped two-phase rank. Identical ids
-    to build_vocabs (ranks are computed per role), ~3x fewer jobs — the
-    id spaces stay fully independent
-    (/root/reference/scripts/extract_vocabs.py:29-31)."""
-    from ..functions.ranking import dense_ids_grouped
-
-    freq = role_freq(canonical_mentions)
-    # EAGER cut: the three role views feed three CONCURRENT broadcast
-    # builds in encode_mentions — a lazy checkpoint caches only after the
-    # first partition computes, so concurrent consumers would each re-run
-    # the window+offset-join tail (the repo's eager-vs-lazy rule).
-    # dense_ids_grouped(eager=True) owns the cut AND drops its two
-    # intermediate caches once the result is materialized, so looping
-    # vocab builds don't accumulate vocab-scale frames.
-    ranked = dense_ids_grouped(
-        freq, "role", [F.desc("cnt"), F.asc("first_pos")], id_col="id", eager=True
-    )
-    vocabs = {
-        role: ranked.filter(F.col("role") == role).select("term", "id", "cnt")
-        for role in ("s", "p", "o")
-    }
-    if with_ranked:
-        # callers can aggregate sizes/frequency stats of all three roles
-        # in ONE job over the checkpointed frame instead of three
-        return vocabs, ranked
-    return vocabs
+def build_vocabs_fused(canonical_mentions: DataFrame) -> DataFrame:
+    """The ranked (role, term, cnt, first_pos, id) frame of all three role
+    vocabularies in ONE job chain: the fused role_freq aggregate, then
+    rank_roles. Ids equal ``build_vocab``'s per role (ranks are computed
+    per role); ``role_vocabs`` splits it into the three dictionaries."""
+    return rank_roles(role_freq(canonical_mentions))
 
 
 def encode_mentions(

@@ -248,15 +248,19 @@ def write_permutations_unified(
     return out_dir
 
 
+def has_parquet(path: str) -> bool:
+    """True iff ``path`` is a directory with a .parquet file at any depth."""
+    return any(f.endswith(".parquet") for _, _, files in os.walk(path) for f in files)
+
+
 def read_permutations_unified(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:
     """Read back the unified layout as canonical (s, p, o) tables. The
     int32 and 64-bit component layouts both read as long (the schema
-    comes from the footers); empty corpora write zero files, so fall back
-    to a typed empty relation."""
-    try:
-        base = spark.read.parquet(out_dir)
-    except Exception:
-        base = None
+    comes from the footers); empty corpora write zero files, so a missing
+    directory or one without a .parquet file reads as a typed empty
+    relation. Any other read error (a corrupt part file) raises: a broken
+    index must not read as an empty one."""
+    base = spark.read.parquet(out_dir) if has_parquet(out_dir) else None
     if base is None or "perm" not in base.columns:
         base = spark.range(0).select(
             F.lit(None).cast("long").alias("c1"),

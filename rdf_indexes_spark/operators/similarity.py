@@ -330,18 +330,6 @@ def _hyperplanes(dim: int, planes: int, table: int, seed: int = 11) -> list[list
     return rng.standard_normal((planes, dim)).tolist()
 
 
-def lsh_bucket_col(vec_col, planes: list[list[float]]):
-    """Sign-pattern bucket id from random hyperplanes (JVM expressions).
-
-    Kept for single-table/plan-visible uses; the hot paths batch ALL
-    tables' projections into one numpy matmul via _all_buckets_df."""
-    bucket = F.lit(0)
-    for i, h in enumerate(planes):
-        proj = _dot(vec_col, F.array(*[F.lit(float(x)) for x in h]))
-        bucket = bucket + F.when(proj >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return bucket
-
-
 def _all_buckets_df(
     df: DataFrame, dim: int, planes: int, tables: int, id_col: str, vec_col: str, out_id: str
 ) -> DataFrame:

@@ -133,13 +133,8 @@ def run_pipeline(
     # ONE fused stage ranks all three role vocabularies (ids identical to
     # per-role builds; ranks are computed per role) — one melt+agg pass
     # over the mention stream instead of three.
-    ranked, fp_v = store.run(
-        "vocabs_ranked", [fp_cm], lambda: enc.build_vocabs_fused(canon, with_ranked=True)[1]
-    )
-    vocabs = {
-        role: ranked.filter(F.col("role") == role).select("term", "id", "cnt")
-        for role in ("s", "p", "o")
-    }
+    ranked, fp_v = store.run("vocabs_ranked", [fp_cm], lambda: enc.build_vocabs_fused(canon))
+    vocabs = enc.role_vocabs(ranked)
     vs, vp, vo = vocabs["s"], vocabs["p"], vocabs["o"]
 
     # vocab hints memoized lazily: the agg job runs only if a stage below

@@ -436,7 +436,7 @@ def test_encode_join_strategy_size_gated(spark, transcripts):
     the vocab sizes: below the threshold a broadcast (the reference's
     in-memory dict probe), above it a shuffle hash join — a billion-term
     vocabulary must never be collected to the driver/executors."""
-    from rdf_indexes_spark.operators.encode import build_vocabs_fused, encode_mentions
+    from rdf_indexes_spark.operators.encode import build_vocabs_fused, encode_mentions, role_vocabs
     from rdf_indexes_spark.operators.extract import extract_mentions
 
     m = (
@@ -444,7 +444,7 @@ def test_encode_join_strategy_size_gated(spark, transcripts):
         .withColumnRenamed("subj", "cs")
         .withColumnRenamed("obj", "co")
     )
-    vocabs = build_vocabs_fused(m)
+    vocabs = role_vocabs(build_vocabs_fused(m))
     small = {"s": 10, "p": 10, "o": 10}
     enc_small, _ = encode_mentions(m, vocabs, sizes=small)
     plan = enc_small._jdf.queryExecution().executedPlan().toString()

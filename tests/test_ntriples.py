@@ -92,7 +92,7 @@ def test_nt_to_index_roundtrip(spark, nt_path, tmp_path):
     sorted-unique mapped corpus (sort -n -u of .mapped.unsorted,
     /root/reference/scripts/sort.py + test/check_index.cpp:9-40)."""
     mentions = rdf_to_mentions(read_ntriples(spark, nt_path, fmt="nt"))
-    vocabs = enc.build_vocabs(mentions)
+    vocabs = enc.role_vocabs(enc.build_vocabs_fused(mentions))
     encoded, quarantine = enc.encode_mentions(mentions, vocabs)
     assert quarantine.count() == 0
     # .mapped.unsorted analogue: duplicates retained, corpus order
@@ -125,7 +125,7 @@ def test_delta_batch_quarantine(spark, nt_path, tmp_path):
     map_dataset.py:61-83): quarantine holds exactly those mentions and
     the encoded set excludes them."""
     mentions = rdf_to_mentions(read_ntriples(spark, nt_path, fmt="nt"))
-    vocabs = enc.build_vocabs(mentions)
+    vocabs = enc.role_vocabs(enc.build_vocabs_fused(mentions))
     delta = tmp_path / "delta.nt"
     delta.write_text(
         "<http://ex/s1> <http://ex/p1> <http://ex/o1> .\n"       # all known

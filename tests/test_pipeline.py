@@ -197,6 +197,23 @@ def test_empty_corpus_end_to_end(spark, workdir):
     assert set(art.stats.first().asDict().values()) == {0}
 
 
+def test_corrupt_index_part_raises(spark, workdir):
+    """A part file that is not Parquet must fail the index read, not read
+    as an empty index (the empty fallback is only for a directory with no
+    .parquet file, as an empty corpus leaves)."""
+    from rdf_indexes_spark.delta import _perms_width_is_int32
+    from rdf_indexes_spark.operators.permutations import read_permutations_unified
+
+    perms = os.path.join(workdir, "corrupt", "perms5")
+    os.makedirs(os.path.join(perms, "perm=1"))
+    with open(os.path.join(perms, "perm=1", "part-00000.parquet"), "wb") as f:
+        f.write(b"this is not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        read_permutations_unified(spark, perms)["spo"].count()
+    with pytest.raises(Exception, match="(?i)parquet"):
+        _perms_width_is_int32(spark, perms)
+
+
 def test_resume_rebuilds_only_invalidated_stage(spark, transcripts, workdir, artifacts):
     """Mid-pipeline kill simulation: delete one stage's manifest — the
     rerun rebuilds that stage (and it alone among the manifest-tracked

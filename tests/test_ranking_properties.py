@@ -1,18 +1,20 @@
 """Property-based tests (hypothesis) for the distributed rank helpers —
 the machinery under B2 dense ids and E5 rank remap. For arbitrary
 (group, value) multisets with duplicates and ties, both the
-driver-offset (dense_ids_grouped) and fully-distributed (grouped_rank)
-implementations must emit, per group, a dense 0..k-1 rank permutation
-whose order agrees with the requested sort order (ties may break either
-way, but tied rows must occupy a contiguous rank block)."""
+driver-offset (dense_ids, with and without a group key) and
+fully-distributed (grouped_rank) implementations must emit, per group,
+a dense 0..k-1 rank permutation whose order agrees with the requested
+sort order (ties may break either way, but tied rows must occupy a
+contiguous rank block)."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from rdf_indexes_spark.functions.ranking import dense_ids_grouped, grouped_rank
+from rdf_indexes_spark.functions.ranking import dense_ids, grouped_rank
 
 ROWS = st.lists(
     st.tuples(st.integers(0, 3), st.integers(-50, 50)), min_size=1, max_size=60
@@ -41,11 +43,14 @@ def test_grouped_rank_is_dense_per_group_sort(spark, rows):
     _check(rows, out.collect())
 
 
+@pytest.mark.parametrize("group_col", ["g", None], ids=["grouped", "ungrouped"])
 @settings(max_examples=8, deadline=None)
 @given(rows=ROWS)
-def test_dense_ids_grouped_matches_contract(spark, rows):
+def test_dense_ids_matches_contract(spark, group_col, rows):
+    if group_col is None:  # one group: the ungrouped rank is global
+        rows = [(0, v) for _, v in rows]
     df = spark.createDataFrame(rows, "g int, v int")
-    out = dense_ids_grouped(df, "g", [F.asc("v")], id_col="rank", num_partitions=5)
+    out = dense_ids(df, [F.asc("v")], id_col="rank", group_col=group_col, num_partitions=5)
     _check(rows, out.collect())
 
 

@@ -75,7 +75,7 @@ def ref_outputs(tmp_path_factory):
 
 def test_vocabs_and_mapping_byte_parity(spark, ref_outputs, tmp_path):
     mentions = rdf_to_mentions(read_ntriples(spark, ref_outputs["nq"], fmt="nq"))
-    vocabs = enc.build_vocabs(mentions)
+    vocabs = enc.role_vocabs(enc.build_vocabs_fused(mentions))
     # vocab files: identical term order (freq desc, first-occurrence ties)
     for role in ("s", "p", "o"):
         out = str(tmp_path / f"{role}_vocab")
@@ -142,7 +142,7 @@ def test_parity_on_generated_corpus(spark, tmp_path):
            for suf in ("subjects_vocab", "predicates_vocab", "objects_vocab", "mapped.unsorted")}
 
     mentions = rdf_to_mentions(read_ntriples(spark, str(nq), fmt="nq"))
-    vocabs = enc.build_vocabs(mentions)
+    vocabs = enc.role_vocabs(enc.build_vocabs_fused(mentions))
     for role, suf in (("s", "subjects_vocab"), ("p", "predicates_vocab"), ("o", "objects_vocab")):
         out = str(tmp_path / f"v_{role}")
         perm.export_vocab_text(vocabs[role], out, num_partitions=3)
@@ -239,7 +239,7 @@ def test_parity_multifile_nq(spark, tmp_path):
            for suf in ("subjects_vocab", "predicates_vocab", "objects_vocab", "mapped.unsorted")}
 
     mentions = rdf_to_mentions(read_ntriples(spark, str(shard_dir), fmt="nq"))
-    vocabs = enc.build_vocabs(mentions)
+    vocabs = enc.role_vocabs(enc.build_vocabs_fused(mentions))
     for role, suf in (("s", "subjects_vocab"), ("p", "predicates_vocab"), ("o", "objects_vocab")):
         out = str(tmp_path / f"mf_{role}")
         perm.export_vocab_text(vocabs[role], out, num_partitions=3)
